@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Json.quote
 
 /** Benchmark main (driver contract): times the headline query set at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -158,14 +159,6 @@ object Bench {
     m.replaceAll("\\s+", " ").take(200)
   }
 
-  private def jq(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Warm-up + best-of-`passCount` timing over `timed`; returns the
     * single-line JSON artifact and the per-query error map (empty on a
     * clean run). Separated from [[main]] so the failure contract is
@@ -192,10 +185,7 @@ object Bench {
     // must drain before each read — task-end events deliver async
     val cpuListener = new org.apache.spark.graft.CpuTimeAccumulator
     spark.sparkContext.addSparkListener(cpuListener)
-    def cpuNow(): Long = {
-      org.apache.spark.graft.BusAccess.waitUntilListenerBusEmpty(spark.sparkContext)
-      cpuListener.cpuNs.get()
-    }
+    def cpuNow(): Long = cpuListener.snapshot(spark.sparkContext)._1
 
     // Warm-up pass: executes every headline plan once so JIT + whole-stage
     // codegen class compilation + parquet footer caches are attributed to
@@ -286,7 +276,7 @@ object Bench {
       }.mkString(""","phases":{""", ",", "}")
     val errJson =
       if (errs.isEmpty) ""
-      else errs.map { case (k, v) => s"${jq(k)}:${jq(v)}" }
+      else errs.map { case (k, v) => s"${quote(k)}:${quote(v)}" }
         .mkString(""","partial":true,"errors":{""", ",", "}")
     val json =
       f"""{"metric":"headline_total","value":${totalOf(timed)}%.3f,"unit":"sec","queries":${qsJson(timed)},"sf":"$sfDir"$extraJson$cpuJson$phasesJson$errJson}"""
@@ -309,7 +299,7 @@ object Bench {
         }.mkString
     val errNamesJson =
       if (errs.isEmpty) ""
-      else errs.keys.map(jq).mkString(""","partial":true,"failed":[""", ",", "]")
+      else errs.keys.map(quote).mkString(""","partial":true,"failed":[""", ",", "]")
     val compact =
       f"""{"metric":"headline_total","value":${totalOf(timed)}%.3f,"unit":"sec","queries":${qsJson(timed)},"sf":"$sfDir"$extraTotalsJson$cpuTotalsJson$errNamesJson}"""
     (json, compact, errs.toMap)
@@ -317,7 +307,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // `runMain graft.Bench q_a,q_b` restricts the timed set — local A/B
     // iteration on one query without paying the full suite. A program
     // argument, not an env var: `sbt -client` executes in the long-lived
@@ -349,26 +338,7 @@ object Bench {
           "mor_serve_total" -> morServe.filter(o),
           "retrieval_zipf_total" -> retrievalZipf.filter(o)).filter(_._2.nonEmpty)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkSessionExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r19 measurement-bug fix: the default 100-entry codegen class
-      // cache cannot hold a multi-query application's working set, so
-      // every re-execution paid a full Janino whole-stage recompilation
-      // INSIDE task threads (measured: q_retrieval_bm25_stats 26.7 CPU /
-      // 2.48 wall with the default vs 3.9 CPU / 0.98 wall with the cache
-      // sized to fit — OPTIMIZATION_r19.md has the receipts). A
-      // long-running deployment wants compiled plans cached; this is the
-      // steady-state behavior the warm-up pass was designed to measure.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
     val (json0, compact, errs) = run(spark, sfDir, timed, SparkEntry.queries, extraMetrics = extras)
     // per-model timings for the engine-DAG metric (r15): ONE extra
@@ -437,11 +407,11 @@ object Bench {
     if (errs.nonEmpty) {
       val nTimed = (timed ++ extras.flatMap(_._2)).distinct.size
       System.err.println(s"[bench] ${errs.size} of $nTimed queries FAILED: ${errs.keys.mkString(", ")}")
-      println(compact)
-      System.err.println(compact) // bare final stderr copy (r19 contract fix)
-      sys.exit(1)
     }
     println(compact)
-    System.err.println(compact) // bare final stderr copy (r19 contract fix)
+    // marked, so a consumer merging stdout and stderr sees one bare
+    // compact artifact
+    System.err.println(s"[bench] compact $compact")
+    if (errs.nonEmpty) sys.exit(1)
   }
 }

@@ -81,26 +81,7 @@ object Main {
 
   def main(argv: Array[String]): Unit = {
     val args = parseArgs(argv)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkSessionExtension")
-      .appName(s"graft-${args.command}")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // r19 measurement-bug fix: the default 100-entry codegen class
-      // cache cannot hold a multi-query application's working set, so
-      // every re-execution paid a full Janino whole-stage recompilation
-      // INSIDE task threads (measured: q_retrieval_bm25_stats 26.7 CPU /
-      // 2.48 wall with the default vs 3.9 CPU / 0.98 wall with the cache
-      // sized to fit — OPTIMIZATION_r19.md has the receipts). A
-      // long-running deployment wants compiled plans cached; this is the
-      // steady-state behavior the warm-up pass was designed to measure.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(GraftSession.builder().appName(s"graft-${args.command}"))
     try {
       val code = execute(spark, args, new java.io.PrintWriter(System.out, true))
       if (code != 0) sys.exit(code)

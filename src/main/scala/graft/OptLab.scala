@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 /** Optimization-round stage-attribution lab: times sub-stages of the
@@ -8,39 +9,61 @@ import org.apache.spark.sql.functions._
   * axes (same listener as Bench/ScaleProbe), so per-operator changes are
   * driven by where the time actually goes, not by plan aesthetics.
   * Throwaway-grade tool, kept for reproducibility of OPTIMIZATION_r18.md
-  * numbers: `sbt "runMain graft.OptLab /root/testdata/sf0.1 lsh"`. */
+  * numbers: `sbt "runMain graft.OptLab <sfDir> lsh"`.
+  *
+  * The `plans` mode dumps `.explain("formatted")` for declared queries
+  * (default: every query) to `<outDir>/<name>_<suffix>.txt`, so plan
+  * claims in OPTIMIZATION_r*.md are checkable against committed
+  * artifacts without running Spark:
+  *
+  *   sbt "runMain graft.OptLab plans <sfDir> plans/r18 before q_a,q_b"
+  *
+  * Formatted explain shows the INITIAL plan (AQE isFinalPlan=false); join
+  * strategy / exchange counts read from it are pre-AQE, which is the
+  * comparable shape across changes. Both modes run on the
+  * [[GraftSession]] the bench times. */
 object OptLab {
   def main(args: Array[String]): Unit = {
+    require(!args.headOption.contains("plans") || args.length >= 4,
+      "usage: OptLab plans <sfDir> <outDir> <suffix> [q_a,q_b]")
+    val spark = GraftSession.create()
+    args.toList match {
+      case "plans" :: sfDir :: outDir :: suffix :: names =>
+        dumpPlans(spark, sfDir, outDir, suffix,
+          names.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
+      case _ => lab(spark, args)
+    }
+    spark.stop()
+  }
+
+  private def dumpPlans(spark: SparkSession, sfDir: String, outDir: String,
+                        suffix: String, only: Seq[String]): Unit = {
+    val names = if (only.nonEmpty) only else SparkEntry.queries.keys.toSeq.sorted
+    val dir = java.nio.file.Paths.get(outDir)
+    java.nio.file.Files.createDirectories(dir)
+    names.foreach { name =>
+      SparkEntry.queries.get(name) match {
+        case None => System.err.println(s"[plans] unknown query: $name")
+        case Some(q) =>
+          try {
+            val txt = q(spark, sfDir).queryExecution.explainString(FormattedMode)
+            java.nio.file.Files.write(dir.resolve(s"${name}_$suffix.txt"),
+              txt.getBytes("UTF-8"))
+            println(s"[plans] wrote ${name}_$suffix.txt")
+          } catch { case t: Throwable =>
+            System.err.println(s"[plans] $name failed: ${t.getMessage}")
+          }
+      }
+    }
+  }
+
+  private def lab(spark: SparkSession, args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val which: String => Boolean =
       if (args.length > 1) args.drop(1).toSet.contains else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkSessionExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r19 measurement-bug fix: the default 100-entry codegen class
-      // cache cannot hold a multi-query application's working set, so
-      // every re-execution paid a full Janino whole-stage recompilation
-      // INSIDE task threads (measured: q_retrieval_bm25_stats 26.7 CPU /
-      // 2.48 wall with the default vs 3.9 CPU / 0.98 wall with the cache
-      // sized to fit — OPTIMIZATION_r19.md has the receipts). A
-      // long-running deployment wants compiled plans cached; this is the
-      // steady-state behavior the warm-up pass was designed to measure.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val cpuAcc = new org.apache.spark.graft.CpuTimeAccumulator
     spark.sparkContext.addSparkListener(cpuAcc)
-    def now(): (Long, Long) = {
-      org.apache.spark.graft.BusAccess.waitUntilListenerBusEmpty(spark.sparkContext)
-      (cpuAcc.cpuNs.get(), cpuAcc.shuffleRecords.get())
-    }
+    def now(): (Long, Long) = cpuAcc.snapshot(spark.sparkContext)
     def timed(name: String)(body: => DataFrame): Unit = {
       // warm-up once, then best-of-2 (lab-grade, not bench-grade)
       body.write.format("noop").mode("overwrite").save()
@@ -322,6 +345,5 @@ object OptLab {
         ops.Retrieval.prefixQueries(docs, "doc_id", "text", modulo = 53, prefixTokens = 3),
         "query_id", "qtext"))
     }
-    spark.stop()
   }
 }

@@ -78,29 +78,10 @@ object ScaleProbe {
     val sizes = if (numArgs.nonEmpty) numArgs.map(_.toInt).toSeq else Seq(5000, 50000)
     val opFilter: String => Boolean =
       if (opArgs.isEmpty) _ => true else opArgs.toSet.contains
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // r19 measurement-bug fix: the default 100-entry codegen class
-      // cache cannot hold a multi-query application's working set, so
-      // every re-execution paid a full Janino whole-stage recompilation
-      // INSIDE task threads (measured: q_retrieval_bm25_stats 26.7 CPU /
-      // 2.48 wall with the default vs 3.9 CPU / 0.98 wall with the cache
-      // sized to fit — OPTIMIZATION_r19.md has the receipts). A
-      // long-running deployment wants compiled plans cached; this is the
-      // steady-state behavior the warm-up pass was designed to measure.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(GraftSession.builder().appName("graft-scale-probe"))
     val cpuAcc = new org.apache.spark.graft.CpuTimeAccumulator
     spark.sparkContext.addSparkListener(cpuAcc)
-    metricsNow = () => {
-      org.apache.spark.graft.BusAccess.waitUntilListenerBusEmpty(spark.sparkContext)
-      (cpuAcc.cpuNs.get(), cpuAcc.shuffleRecords.get())
-    }
+    metricsNow = () => cpuAcc.snapshot(spark.sparkContext)
 
     val results = scala.collection.mutable.Map.empty[Int, Seq[(String, Double, Double, Long)]]
     sizes.foreach { n =>
@@ -110,7 +91,7 @@ object ScaleProbe {
       val runs = scala.collection.mutable.Buffer.empty[(String, Double, Double, Long)]
       // band cap ON (the 100 TB configuration): without it the hottest
       // band bucket at 150k docs holds 20% of the corpus and the self-
-      // join implies 1.3e9 rows (BandDiag; SCALE.md round-6 note)
+      // join implies 1.3e9 rows (SCALE.md round-6 note)
       timed("minhash_lsh_pairs", runs, opFilter)(
         ops.Dedup.minhashLshPairsPreset(docs, "doc_id", "text",
           maxBandFrequency = Some(2000)).count())

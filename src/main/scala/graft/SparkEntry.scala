@@ -18,29 +18,11 @@ object SparkEntry {
 
   /** Self-contained smoke main (r19 — VERIFY_r18 flagged `entry_ok:false`
     * with q1 itself healthy at both SFs, i.e. an invocation-shape gap, not
-    * an engine bug): `runMain graft.SparkEntry` now builds a session the
-    * same way the other mains do, runs [[entry]], and exits nonzero unless
-    * it returns rows. Prints one bare line `entry_rows=<n>` for tail
-    * consumers. */
+    * an engine bug): `runMain graft.SparkEntry` builds a [[GraftSession]],
+    * runs [[entry]], and exits nonzero unless it returns rows. Prints one
+    * bare line `entry_rows=<n>` for tail consumers. */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkSessionExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r19 measurement-bug fix: the default 100-entry codegen class
-      // cache cannot hold a multi-query application's working set, so
-      // every re-execution paid a full Janino whole-stage recompilation
-      // INSIDE task threads (measured: q_retrieval_bm25_stats 26.7 CPU /
-      // 2.48 wall with the default vs 3.9 CPU / 0.98 wall with the cache
-      // sized to fit — OPTIMIZATION_r19.md has the receipts). A
-      // long-running deployment wants compiled plans cached; this is the
-      // steady-state behavior the warm-up pass was designed to measure.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val rows = entry(spark).count()
     println(s"entry_rows=$rows")
     spark.stop()

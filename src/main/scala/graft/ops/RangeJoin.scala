@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.JoinHints
 import org.apache.spark.sql.types.LongType
 
 /** Range join: match point rows to interval rows with
@@ -35,7 +36,11 @@ object RangeJoin {
       .withColumn("__hi_b", floor((hiExpr - 1) / bucketWidth).cast(LongType))
       .withColumn("__bucket", explode(sequence(col("__lo_b"), greatest(col("__hi_b"), col("__lo_b")))))
       .drop("__lo_b", "__hi_b")
-    p.join(i, keys :+ "__bucket")
+    // Catalyst sizes the exploded side at its PRE-explode estimate, so long
+    // intervals (open-ended SCD-2 rows span thousands of buckets) pass for
+    // broadcastable and the broadcast exhausts the driver; only the points
+    // side may be a broadcast build side
+    p.join(JoinHints.noBroadcast(i), keys :+ "__bucket")
       .filter(pointExpr >= loExpr && pointExpr < hiExpr)
       .drop("__bucket")
   }

@@ -20,12 +20,19 @@ object BusAccess {
   * time itself inflates 2-3× under heavy SMT contention; shuffle-write
   * records are the fully DETERMINISTIC structural axis (a plan shape
   * either moves the rows or it doesn't), so A/B legs comparing plan
-  * shapes read it first. Read via
-  * [[BusAccess.waitUntilListenerBusEmpty]] first: task-end events are
+  * shapes read it first. Read via [[snapshot]]: task-end events are
   * delivered asynchronously. */
 class CpuTimeAccumulator extends org.apache.spark.scheduler.SparkListener {
   val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
   val shuffleRecords = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** (executor CPU ns, shuffle-write records) so far, read after `sc`'s
+    * listener bus has delivered every queued task end. */
+  def snapshot(sc: SparkContext): (Long, Long) = {
+    BusAccess.waitUntilListenerBusEmpty(sc)
+    (cpuNs.get(), shuffleRecords.get())
+  }
+
   override def onTaskEnd(
       taskEnd: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
     val m = taskEnd.taskMetrics

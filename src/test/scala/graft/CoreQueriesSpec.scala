@@ -4,17 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftSparkSessionExtension")
+  /** Cores (and shuffle partitions) of the shared test session. */
+  val cpus = 4
+  lazy val spark: SparkSession = GraftSession.create(GraftSession.builder(cpus)
+    .master(s"local[$cpus]")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     // the S3-semantics mock scheme (no rename, conditional PUT) — lets any
     // spec use a URI-shaped warehouse root (UriWarehouseSpec)
-    .config("spark.hadoop.fs.s3mock.impl", "graft.S3SemanticsFileSystem")
-    .getOrCreate()
+    .config("spark.hadoop.fs.s3mock.impl", "graft.S3SemanticsFileSystem"))
 }
 
 class CoreQueriesSpec extends AnyFunSuite {

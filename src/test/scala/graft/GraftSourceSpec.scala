@@ -2,13 +2,14 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.core.Relation
 import graft.relations.RelationManager
 
 /** DataSource V2 connector: manifest-exact batch reads (+ time travel,
   * column pruning) and version-offset streaming over commit-log tables. */
-class GraftSourceSpec extends AnyFunSuite {
+class GraftSourceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
   test("batch read: current version, time travel, and staged-file invisibility") {
@@ -42,7 +43,7 @@ class GraftSourceSpec extends AnyFunSuite {
     val df = spark.read.format("graft").load(rm.path(rel).toString).select("id")
     assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val scans = df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+    val scans = collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
     assert(scans.nonEmpty, df.queryExecution.executedPlan.toString)
     assert(scans.head.scan.readSchema().fieldNames.toSeq == Seq("id"),
       s"scan must prune to id: ${scans.head.scan.readSchema()}")

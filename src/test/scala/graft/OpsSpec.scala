@@ -919,6 +919,27 @@ class RangeJoinSpec extends AnyFunSuite {
       s"range join must stay an equi-join:\n$plan")
   }
 
+  test("an exploded interval side is not broadcast on its pre-explode size estimate") {
+    // 40 intervals (under 1 KB estimated) each span 5000 buckets and
+    // explode to 200k rows — far past the threshold set here, as open-ended
+    // SCD-2 rows (5000+ daily buckets to maxTs) are past the session's
+    // 64 MB one at sf0.1, where a broadcast of them exhausts the driver
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (256 * 1024).toString)
+    try {
+      val points = spark.range(0, 50000).select(col("id").as("pid"), col("id").as("x"))
+      val intervals = spark.range(0, 40).select(col("id").as("iid"),
+        (col("id") * 10).as("lo"), (col("id") * 10 + 50000).as("hi"))
+      val n = RangeJoin.pointInInterval(points, intervals,
+        col("x"), col("lo"), col("hi"), keys = Nil, bucketWidth = 10)
+        .agg(count(lit(1)))
+      assert(n.collect().head.getLong(0) == (0 until 40).map(i => 50000L - 10 * i).sum)
+      val plan = n.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      assert(!plan.contains("BroadcastHashJoin"),
+        s"exploded interval side must not be broadcast:\n$plan")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("SCD-2 lookup: order joined to the snapshot version valid at order time") {
     import spark.implicits._
     val t = (s: String) => java.sql.Timestamp.valueOf(s)

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.ops.Retrieval
 
@@ -9,7 +10,7 @@ import graft.ops.Retrieval
   * Okapi BM25 against the hand formula, the pure-append ingest law,
   * deterministic tie-breaking, df-based stopword elision, RRF fusion
   * math, and the no-cartesian plan shape. */
-class RetrievalSpec extends AnyFunSuite {
+class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
   private def corpus: DataFrame = {
@@ -584,13 +585,20 @@ class RetrievalSpec extends AnyFunSuite {
     // ensureParallelism spread of a provably-tiny local scan — at most
     // one, and round-robin/hash over the RAW documents, never a
     // corpus-sized posting-row aggregate
+    // executed first, then walked through the AQE wrapper: an unexecuted
+    // AdaptiveSparkPlanExec is a leaf, so a plain `plan.collect` finds
+    // nothing and both checks would pass whatever the plan holds
     Seq(post, pos).foreach { df =>
+      df.collect()
       val plan = df.queryExecution.executedPlan
-      val aggs = plan.collect {
+      assert(collect(plan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }.nonEmpty, s"plan walk did not reach the documents scan: $plan")
+      val aggs = collect(plan) {
         case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
       }
       assert(aggs.isEmpty, s"index build still aggregates: $plan")
-      val exchanges = plan.collect {
+      val exchanges = collect(plan) {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
       }
       assert(exchanges.size <= 1,
