@@ -404,9 +404,7 @@ object Main {
         // deletes target/, which holds artifacts AND the default warehouse)
         val target = java.nio.file.Paths.get(s"${args.project}/target")
         if (java.nio.file.Files.exists(target)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(target).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
+          graft.relations.WarehouseIO.deleteDir(target.toString)
           out.println(s"cleaned $target")
         } else out.println(s"nothing to clean at $target")
         0

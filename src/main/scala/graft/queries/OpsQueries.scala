@@ -1622,54 +1622,20 @@ object OpsQueries {
     // generic tests on both) built by Main.execute; the served table
     // must equal the hand-composed q_retrieval_bm25_topk's oracle.
     "q_retrieval_project" -> ((s, d) => {
-      val proj = stageProject("examples/retrieval", d)
-      val nanosWas = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      try {
-        val sink = new java.io.PrintWriter(java.io.Writer.nullWriter(), true)
-        val code = graft.Main.execute(s, graft.Main.Args(
-          command = "build", project = proj), sink)
-        require(code == 0, s"graft build of the retrieval project exited $code")
-        new graft.relations.RelationManager(s, s"$proj/target/warehouse")
-          .read(graft.core.Relation("graft", "main", "bm25_top10"))
+      withProjectBuild(s, "retrieval", d) { (rm, build) =>
+        build(Map.empty)
+        rm.read(graft.core.Relation("graft", "main", "bm25_top10"))
           .orderBy("query_id", "rank")
           .localCheckpoint(true)
-      } finally {
-        graft.Tables.names.foreach(n => s.catalog.dropTempView(s"corpus_$n"))
-        nanosWas match {
-          case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-          case None    => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        }
-        deleteDir(proj)
       }
     }),
 
     "q_curation_project" -> ((s, d) => {
-      val proj = stageCurationProject(d)
-      // Main.execute mutates shared-session state (registerSources flips
-      // spark.sql.legacy.parquet.nanosAsLong and registers corpus_*
-      // views): snapshot + restore so later queries in the same sweep
-      // see the session they'd see standalone, and MATERIALIZE the audit
-      // so the staged project dir (and its warehouse) can be deleted
-      // before returning instead of leaking per invocation (r14 review)
-      val nanosWas = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      try {
-        val sink = new java.io.PrintWriter(java.io.Writer.nullWriter(), true)
-        val code = graft.Main.execute(s, graft.Main.Args(
-          command = "build", project = proj), sink)
-        require(code == 0, s"graft build of the curation project exited $code")
-        new graft.relations.RelationManager(s, s"$proj/target/warehouse")
-          .read(graft.core.Relation("graft", "main", "audit"))
+      withProjectBuild(s, "curation", d) { (rm, build) =>
+        build(Map.empty)
+        rm.read(graft.core.Relation("graft", "main", "audit"))
           .orderBy("doc_id")
           .localCheckpoint(true)
-      } finally {
-        // registerSources registered EVERY parquet under the source dir
-        // as a corpus_* view — drop them all
-        graft.Tables.names.foreach(n => s.catalog.dropTempView(s"corpus_$n"))
-        nanosWas match {
-          case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-          case None    => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        }
-        deleteDir(proj)
       }
     }),
 
@@ -1687,24 +1653,13 @@ object OpsQueries {
     // files live only in the day-2 partition; every artifact MV stays
     // at its build-1 version — "fresh").
     "q_curation_project_incremental" -> ((s, d) => {
-      val proj = stageProject("examples/curation_incremental", d)
-      val nanosWas = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      try {
-        val sink = new java.io.PrintWriter(java.io.Writer.nullWriter(), true)
-        def build(runEnd: String): Unit = {
-          val code = graft.Main.execute(s, graft.Main.Args(
-            command = "build", project = proj,
-            vars = Map("run_end" -> runEnd)), sink)
-          require(code == 0,
-            s"graft build (run_end=$runEnd) of the incremental curation project exited $code")
-        }
-        val rm = new graft.relations.RelationManager(s, s"$proj/target/warehouse")
+      withProjectBuild(s, "curation_incremental", d) { (rm, build) =>
         val stages = Seq("rules", "scored", "dsir", "ledger", "audit")
         val artifacts = Seq("lm_uni", "lm_bi", "ppl_cuts", "dsir_model", "dsir_cut")
         def rel(n: String) = graft.core.Relation("graft", "main", n)
-        build("2025-01-02T00:00:00Z")
+        build(Map("run_end" -> "2025-01-02T00:00:00Z"))
         val after1 = (stages ++ artifacts).map(n => n -> rm.currentState(rel(n)).get).toMap
-        build("2025-01-03T00:00:00Z")
+        build(Map("run_end" -> "2025-01-03T00:00:00Z"))
         stages.foreach { n =>
           val (v1, v2) = (after1(n), rm.currentState(rel(n)).get)
           require(v2.version == v1.version + 1,
@@ -1722,13 +1677,6 @@ object OpsQueries {
         }
         rm.read(rel("audit")).drop("__graft_batch")
           .orderBy("doc_id").localCheckpoint(true)
-      } finally {
-        graft.Tables.names.foreach(n => s.catalog.dropTempView(s"corpus_$n"))
-        nanosWas match {
-          case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-          case None    => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        }
-        deleteDir(proj)
       }
     }),
 
@@ -1747,23 +1695,12 @@ object OpsQueries {
     // partition, rewriting nothing), and the bucket layout is asserted
     // structurally (every store file under a _bucket= dir).
     "q_retrieval_project_incremental" -> ((s, d) => {
-      val proj = stageProject("examples/retrieval_incremental", d)
-      val nanosWas = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      try {
-        val sink = new java.io.PrintWriter(java.io.Writer.nullWriter(), true)
-        def build(runEnd: String): Unit = {
-          val code = graft.Main.execute(s, graft.Main.Args(
-            command = "build", project = proj,
-            vars = Map("run_end" -> runEnd)), sink)
-          require(code == 0,
-            s"graft build (run_end=$runEnd) of the incremental retrieval project exited $code")
-        }
-        val rm = new graft.relations.RelationManager(s, s"$proj/target/warehouse")
+      withProjectBuild(s, "retrieval_incremental", d) { (rm, build) =>
         def rel(n: String) = graft.core.Relation("graft", "main", n)
         val stores = Seq("postings", "doc_lens", "term_stats")
-        build("2025-01-02T00:00:00Z")
+        build(Map("run_end" -> "2025-01-02T00:00:00Z"))
         val after1 = stores.map(n => n -> rm.currentState(rel(n)).get).toMap
-        build("2025-01-03T00:00:00Z")
+        build(Map("run_end" -> "2025-01-03T00:00:00Z"))
         stores.foreach { n =>
           val (v1, v2) = (after1(n), rm.currentState(rel(n)).get)
           require(v2.version == v1.version + 1,
@@ -1785,7 +1722,7 @@ object OpsQueries {
         // the checkpoint leaves zero batches, so no store commits —
         // the idempotency half of the O(batch) story (r16, third build)
         val before3 = stores.map(n => rm.currentState(rel(n)).get.version)
-        build("2025-01-03T00:00:00Z")
+        build(Map("run_end" -> "2025-01-03T00:00:00Z"))
         val after3 = stores.map(n => rm.currentState(rel(n)).get.version)
         require(after3 == before3,
           s"a same-window catch-up build must not commit to the stores: " +
@@ -1797,13 +1734,6 @@ object OpsQueries {
           rel("term_stats"), rel("postings"))
         rm.read(rel("bm25_top10"))
           .orderBy("query_id", "rank").localCheckpoint(true)
-      } finally {
-        graft.Tables.names.foreach(n => s.catalog.dropTempView(s"corpus_$n"))
-        nanosWas match {
-          case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-          case None    => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        }
-        deleteDir(proj)
       }
     }),
 
@@ -1821,18 +1751,11 @@ object OpsQueries {
     // keygroupedpartitioning) while the store streams from its
     // BatchScan. Same law, same oracle as every BM25 gate.
     "q_retrieval_project_regime2" -> ((s, d) => {
-      val proj = stageProject("examples/retrieval_incremental", d)
-      val nanosWas = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
       val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val sink = new java.io.PrintWriter(java.io.Writer.nullWriter(), true)
-        val code = graft.Main.execute(s, graft.Main.Args(
-          command = "build", project = proj,
-          // one run covers both generations: two day batches
-          vars = Map("run_end" -> "2025-01-03T00:00:00Z")), sink)
-        require(code == 0, s"graft build of the regime-2 project exited $code")
-        val rm = new graft.relations.RelationManager(s, s"$proj/target/warehouse")
+      try withProjectBuild(s, "retrieval_incremental", d) { (rm, build) =>
+        // one run covers both generations: two day batches
+        build(Map("run_end" -> "2025-01-03T00:00:00Z"))
         def rel(n: String) = graft.core.Relation("graft", "main", n)
         // plan receipt on the Runner's own dep frames (rm.read is what
         // the registered session views wrap): probe side keygrouped into
@@ -1854,15 +1777,7 @@ object OpsQueries {
             s"bucket layout:\n$plan")
         rm.read(rel("bm25_top10_shuffle"))
           .orderBy("query_id", "rank").localCheckpoint(true)
-      } finally {
-        graft.Tables.names.foreach(n => s.catalog.dropTempView(s"corpus_$n"))
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-        nanosWas match {
-          case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-          case None    => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        }
-        deleteDir(proj)
-      }
+      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }),
 
     // r17 (VERDICT task 1): deletion-driven store GC as a SCHEDULED DAG
@@ -1884,18 +1799,7 @@ object OpsQueries {
     // operation pairs every posting delete with its compensating
     // negative df append.
     "q_retrieval_project_gc" -> ((s, d) => {
-      val proj = stageProject("examples/retrieval_gc", d)
-      val nanosWas = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      try {
-        val sink = new java.io.PrintWriter(java.io.Writer.nullWriter(), true)
-        def build(runEnd: String): Unit = {
-          val code = graft.Main.execute(s, graft.Main.Args(
-            command = "build", project = proj,
-            vars = Map("run_end" -> runEnd)), sink)
-          require(code == 0,
-            s"graft build (run_end=$runEnd) of the retrieval GC project exited $code")
-        }
-        val rm = new graft.relations.RelationManager(s, s"$proj/target/warehouse")
+      withProjectBuild(s, "retrieval_gc", d) { (rm, build) =>
         def rel(n: String) = graft.core.Relation("graft", "main", n)
         def storeMass(): (Long, Long, Long) = {
           val postRows = rm.read(rel("postings")).count()
@@ -1904,7 +1808,7 @@ object OpsQueries {
           val dlRows = rm.read(rel("doc_lens")).count()
           (postRows, sd, dlRows)
         }
-        build("2025-01-02T00:00:00Z")
+        build(Map("run_end" -> "2025-01-02T00:00:00Z"))
         val p1 = rm.currentState(rel("postings")).get
         val t1 = rm.currentState(rel("term_stats")).get
         // the declared bucket layout survives the GC rewrite — the store
@@ -1913,7 +1817,7 @@ object OpsQueries {
           s"bucket layout must survive GC: ${p1.bucketBy}/${p1.buckets}")
         require(p1.files.nonEmpty && p1.files.forall(_.contains("/_bucket=")),
           s"every post-GC posting file must route through the bucket layout")
-        build("2025-01-03T00:00:00Z")
+        build(Map("run_end" -> "2025-01-03T00:00:00Z"))
         val p2 = rm.currentState(rel("postings")).get
         val t2 = rm.currentState(rel("term_stats")).get
         val d2 = rm.currentState(rel("doc_lens")).get
@@ -1941,7 +1845,7 @@ object OpsQueries {
         // and the GC operation compensates nothing twice (the doc_lens
         // EXISTS witness) — serving-visible store mass is unchanged
         val massBefore = storeMass()
-        build("2025-01-03T00:00:00Z")
+        build(Map("run_end" -> "2025-01-03T00:00:00Z"))
         require(storeMass() == massBefore,
           s"catch-up build must not change store mass: $massBefore -> ${storeMass()}")
         // r18 (VERDICT r17 #6): the operation consumes the deletion feed
@@ -1972,13 +1876,6 @@ object OpsQueries {
           "gc_compact's vacuum must have truncated old posting versions")
         rm.read(rel("bm25_top10"))
           .orderBy("query_id", "rank").localCheckpoint(true)
-      } finally {
-        graft.Tables.names.foreach(n => s.catalog.dropTempView(s"corpus_$n"))
-        nanosWas match {
-          case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-          case None    => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        }
-        deleteDir(proj)
       }
     }),
 
@@ -2002,26 +1899,15 @@ object OpsQueries {
     // direct survivor rebuild, and that the catch-up build's GC (an
     // empty ref_changes window) touches zero store files.
     "q_curation_project_gc" -> ((s, d) => {
-      val proj = stageProject("examples/curation_gc", d)
-      val nanosWas = s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      try {
-        val sink = new java.io.PrintWriter(java.io.Writer.nullWriter(), true)
-        def build(runEnd: String): Unit = {
-          val code = graft.Main.execute(s, graft.Main.Args(
-            command = "build", project = proj,
-            vars = Map("run_end" -> runEnd)), sink)
-          require(code == 0,
-            s"graft build (run_end=$runEnd) of the curation GC project exited $code")
-        }
-        val rm = new graft.relations.RelationManager(s, s"$proj/target/warehouse")
+      withProjectBuild(s, "curation_gc", d) { (rm, build) =>
         def rel(n: String) = graft.core.Relation("graft", "main", n)
-        build("2025-01-02T00:00:00Z")
+        build(Map("run_end" -> "2025-01-02T00:00:00Z"))
         val b1 = rm.currentState(rel("band_index")).get
         require(b1.buckets == 8 && b1.bucketBy == Seq("band"),
           s"band layout must be declared at bootstrap: ${b1.bucketBy}/${b1.buckets}")
         require(b1.files.nonEmpty && b1.files.forall(_.contains("/_bucket=")),
           "every band-index file must route through the bucket layout")
-        build("2025-01-03T00:00:00Z")
+        build(Map("run_end" -> "2025-01-03T00:00:00Z"))
         val b2 = rm.currentState(rel("band_index")).get
         val f2 = rm.currentState(rel("fingerprints")).get
         val g2 = rm.currentState(rel("gram_counts")).get
@@ -2051,7 +1937,7 @@ object OpsQueries {
         // rebuild provably no-ops (materialized_view fingerprint stamps
         // the fingerprint store's version — unchanged, so "fresh")
         val k2 = rm.currentState(rel("kmv_ndv")).map(_.version)
-        build("2025-01-03T00:00:00Z")
+        build(Map("run_end" -> "2025-01-03T00:00:00Z"))
         require(rm.currentState(rel("kmv_ndv")).map(_.version) == k2,
           "a no-new-deletions build must no-op the KMV survivor rebuild")
         val b3 = rm.currentState(rel("band_index")).get
@@ -2100,13 +1986,6 @@ object OpsQueries {
             rm.history(rel("fingerprints"), limit = 10).size <= 2,
           "gc_compact's vacuum must have truncated old store versions")
         rm.read(rel("dup_report")).orderBy("probe_id").localCheckpoint(true)
-      } finally {
-        graft.Tables.names.foreach(n => s.catalog.dropTempView(s"corpus_$n"))
-        nanosWas match {
-          case Some(v) => s.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-          case None    => s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        }
-        deleteDir(proj)
       }
     }),
 
@@ -4997,6 +4876,38 @@ object OpsQueries {
       f.delete(); ()
     }
     go(new java.io.File(path))
+  }
+
+  /** Stage `examples/<name>` against `sfDir` and hand `body` the staged
+    * project's warehouse plus a `build(vars)` that runs `graft build`
+    * through Main.execute and fails on a nonzero exit. Main.execute
+    * mutates the shared session (registerSources sets the legacy parquet
+    * nanos conf and registers every parquet under the source dir as a
+    * corpus_* view), so the finally restores both, letting later queries
+    * in a sweep see the session they would see standalone, and deletes
+    * the staged dir: `body` must materialize the frame it returns. */
+  private def withProjectBuild(s: SparkSession, name: String, sfDir: String)(
+      body: (graft.relations.RelationManager, Map[String, String] => Unit) => DataFrame)
+      : DataFrame = {
+    val proj = stageProject(s"examples/$name", sfDir)
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    val nanosWas = s.conf.getOption(nanosKey)
+    try {
+      val sink = new java.io.PrintWriter(java.io.Writer.nullWriter(), true)
+      def build(vars: Map[String, String]): Unit = {
+        val code = graft.Main.execute(s, graft.Main.Args(
+          command = "build", project = proj, vars = vars), sink)
+        require(code == 0, s"graft build of examples/$name (vars $vars) exited $code")
+      }
+      body(new graft.relations.RelationManager(s, s"$proj/target/warehouse"), build)
+    } finally {
+      graft.Tables.names.foreach(n => s.catalog.dropTempView(s"corpus_$n"))
+      nanosWas match {
+        case Some(v) => s.conf.set(nanosKey, v)
+        case None    => s.conf.unset(nanosKey)
+      }
+      deleteDir(proj)
+    }
   }
 
   /** Stage a checked-in example project into a temp dir with its

@@ -14,8 +14,7 @@ object StreamQueries {
   /** Stage a frame as ONE parquet file in `landing` with a pinned mtime
     * (the file source batches oldest-modified first). The single part
     * file is REQUIRED — a missing part used to NPE at Files.move (r11
-    * ADVICE) — and the write-stage temp dir is deleted after the move.
-    * Shared by every staged-ingest stream query. */
+    * ADVICE) — and the write-stage temp dir is deleted after the move. */
   private def stageAsFile(landing: java.nio.file.Path, name: String,
                           df: DataFrame, mtime: Long): Unit = {
     import java.nio.file.Files
@@ -40,30 +39,37 @@ object StreamQueries {
       Files.move(part, dst)
       Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(mtime))
-    } finally deleteRecursively(tmp)
+    } finally OpsQueries.deleteDir(tmp.toString)
   }
 
-  /** Best-effort recursive delete for the landing/checkpoint dirs a
-    * finished stream no longer needs. Warehouse dirs are NOT deleted:
-    * the returned frame reads them lazily after this call returns. */
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  /** The two-generation ingest every stream ≡ batch gate runs: `gen0`
+    * and `gen1` land as one parquet file each (gen1 modified ten minutes
+    * later, so it is the second micro-batch), a file stream reading one
+    * file per trigger hands each batch to `body`, and the stream runs to
+    * completion. The landing and checkpoint dirs are deleted on return;
+    * the gate's warehouse dirs are not, because the frame it returns
+    * reads them lazily. */
+  private def stagedIngest(gen0: DataFrame, gen1: DataFrame)
+                          (body: (DataFrame, Long) => Unit): Unit = {
     import java.nio.file.Files
-    // genuinely best-effort: the query's RESULTS are already correct by
-    // the time cleanup runs, so a cleanup hiccup (racing checkpoint file,
-    // lingering handle) must never fail the gate — swallow, don't throw
+    val landing = Files.createTempDirectory("graft_stream_in")
+    val ckpt = Files.createTempDirectory("graft_stream_ck")
     try {
-      if (Files.exists(p)) {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach { f =>
-            try Files.deleteIfExists(f)
-            catch { case _: java.io.IOException => () }
-          }
-        finally walk.close()
-      }
-      // walk iteration wraps IO failures in UncheckedIOException — still
-      // cleanup-only territory, still swallowed
-    } catch { case _: Exception => () }
+      val t0 = 1700000000000L
+      stageAsFile(landing, "0.parquet", gen0, t0)
+      stageAsFile(landing, "1.parquet", gen1, t0 + 600000L)
+      val q = gen0.sparkSession.readStream.schema(gen0.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(landing.toString)
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch(body)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    } finally {
+      OpsQueries.deleteDir(landing.toString)
+      OpsQueries.deleteDir(ckpt.toString)
+    }
   }
 
   def all: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -111,8 +117,8 @@ object StreamQueries {
       val curated = StreamingOps.curateDocStream(docs, "ts", "1 hour", minQuality = 0.7)
       val q = StreamingOps.appendToTable(curated, rm, rel, "curate_stream", ckpt)
       q.processAllAvailable(); q.stop()
-      deleteRecursively(landing)
-      deleteRecursively(java.nio.file.Paths.get(ckpt))
+      OpsQueries.deleteDir(landing.toString)
+      OpsQueries.deleteDir(ckpt)
       rm.read(rel)
         .groupBy("content_hash")
         .agg(count(lit(1)).as("n_copies"),
@@ -131,34 +137,21 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.Dedup
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_ssx_in")
-      val ckpt = Files.createTempDirectory("graft_ssx_ck")
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", docs.filter(col("doc_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", docs.filter(col("doc_id") % 2 =!= 0), t0 + 600000L)
-
       val rm = new RelationManager(s, Files.createTempDirectory("graft_ssx_wh").toString)
       val storeRel = graft.core.Relation("graft", "main", "window_store")
       val cleanRel = graft.core.Relation("graft", "main", "cleaned_docs")
       rm.writeTable(Dedup.windowHashes(docs.limit(0), "doc_id", "text", 8), storeRel)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val cleaned = Dedup.substringExciseIncremental(batch, "doc_id", "text",
-            n = 8, rm.read(storeRel), "h").localCheckpoint(true)
-          if (rm.exists(cleanRel)) rm.appendTable(cleaned, cleanRel)
-          else rm.writeTable(cleaned, cleanRel)
-          rm.appendTable(Dedup.windowHashes(
-            cleaned.withColumnRenamed("clean_text", "text"), "doc_id", "text", 8),
-            storeRel)
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0)) { (batch, _) =>
+        val cleaned = Dedup.substringExciseIncremental(batch, "doc_id", "text",
+          n = 8, rm.read(storeRel), "h").localCheckpoint(true)
+        if (rm.exists(cleanRel)) rm.appendTable(cleaned, cleanRel)
+        else rm.writeTable(cleaned, cleanRel)
+        rm.appendTable(Dedup.windowHashes(
+          cleaned.withColumnRenamed("clean_text", "text"), "doc_id", "text", 8),
+          storeRel)
+      }
       rm.read(cleanRel)
         .select(col("doc_id"), md5(col("clean_text")).as("clean_md5"),
           col("n_tokens"), col("n_removed"))
@@ -178,40 +171,27 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.Dedup
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_sbl_in")
-      val ckpt = Files.createTempDirectory("graft_sbl_ck")
       // the fixture has zero exact duplicates — plant a canonical block
       // on doc_id % 7 so dup_in_batch (later % 7 evens in gen 1) AND
       // dup_of_corpus (every % 7 odd in gen 2) both occur
       val docs = Tables.documents(s, d).select(col("doc_id"),
         when(col("doc_id") % 7 === 0, lit("planted duplicate content block"))
           .otherwise(col("text")).as("text"))
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", docs.filter(col("doc_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", docs.filter(col("doc_id") % 2 =!= 0), t0 + 600000L)
-
       val rm = new RelationManager(s, Files.createTempDirectory("graft_sbl_wh").toString)
       val storeRel = graft.core.Relation("graft", "main", "fp_store")
       val outRel = graft.core.Relation("graft", "main", "classified_docs")
       rm.writeTable(docs.limit(0).select(md5(col("text")).as("h")), storeRel)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val store = rm.read(storeRel)
-          val bloom = Dedup.fingerprintBloom(store, "h", expectedItems = 100000L)
-          val classified = Dedup.exactIncrementalBloom(batch, "doc_id", "text",
-            store, "h", bloom).localCheckpoint(true)
-          if (rm.exists(outRel)) rm.appendTable(classified, outRel)
-          else rm.writeTable(classified, outRel)
-          rm.appendTable(classified.filter(col("is_new_content"))
-            .select(col("content_hash").as("h")), storeRel)
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0)) { (batch, _) =>
+        val store = rm.read(storeRel)
+        val bloom = Dedup.fingerprintBloom(store, "h", expectedItems = 100000L)
+        val classified = Dedup.exactIncrementalBloom(batch, "doc_id", "text",
+          store, "h", bloom).localCheckpoint(true)
+        if (rm.exists(outRel)) rm.appendTable(classified, outRel)
+        else rm.writeTable(classified, outRel)
+        rm.appendTable(classified.filter(col("is_new_content"))
+          .select(col("content_hash").as("h")), storeRel)
+      }
       rm.read(outRel)
         .select("doc_id", "content_hash", "status", "is_new_content")
         .orderBy("doc_id")
@@ -232,8 +212,6 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.TextAnalysis
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_ssel_in")
-      val ckpt = Files.createTempDirectory("graft_ssel_ck")
       // plant an artifact-uncovered language on a few BATCH rows (never
       // on reference rows — they'd grow their own cutoff group): those
       // docs must surface with a NULL bucket, never silently vanish
@@ -242,10 +220,6 @@ object StreamQueries {
           .otherwise(col("lang")).as("lang"))
       val ref = docs.filter(col("doc_id") % 3 === 0)
       val batchDocs = docs.filter(col("doc_id") % 3 =!= 0)
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", batchDocs.filter(col("doc_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", batchDocs.filter(col("doc_id") % 2 =!= 0), t0 + 600000L)
-
       val rm = new RelationManager(s, Files.createTempDirectory("graft_ssel_wh").toString)
       val uniRel = graft.core.Relation("graft", "main", "lm_unigrams")
       val biRel = graft.core.Relation("graft", "main", "lm_bigrams")
@@ -263,21 +237,14 @@ object StreamQueries {
         .join(ref.select("doc_id", "lang"), Seq("doc_id"))
       rm.writeTable(TextAnalysis.perplexityCutoffs(refScored, "lang",
         "avg_logprob_lm"), cutRel)
-      val q = s.readStream.schema(batchDocs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val out = TextAnalysis.lmSelectIngest(batch, "doc_id", "text", "lang",
-            rm.read(uniRel), rm.read(biRel), rm.read(cutRel))
-            .localCheckpoint(true)
-          if (rm.exists(outRel)) rm.appendTable(out, outRel)
-          else rm.writeTable(out, outRel)
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(batchDocs.filter(col("doc_id") % 2 === 0),
+          batchDocs.filter(col("doc_id") % 2 =!= 0)) { (batch, _) =>
+        val out = TextAnalysis.lmSelectIngest(batch, "doc_id", "text", "lang",
+          rm.read(uniRel), rm.read(biRel), rm.read(cutRel))
+          .localCheckpoint(true)
+        if (rm.exists(outRel)) rm.appendTable(out, outRel)
+        else rm.writeTable(out, outRel)
+      }
       rm.read(outRel)
         .select("doc_id", "lang", "n_bigrams", "avg_logprob_lm",
           "perplexity", "ppl_bucket", "selected")
@@ -295,28 +262,16 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.CorpusStats
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_sndv_in")
-      val ckpt = Files.createTempDirectory("graft_sndv_ck")
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", docs.filter(col("doc_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", docs.filter(col("doc_id") % 2 =!= 0), t0 + 600000L)
       val rm = new RelationManager(s, Files.createTempDirectory("graft_sndv_wh").toString)
       val sketchRel = graft.core.Relation("graft", "main", "ndv_sketch")
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val rows = CorpusStats.kmvMinHashes(batch, "lang", "text", k = 16)
-            .localCheckpoint(true)
-          if (rm.exists(sketchRel)) rm.appendTable(rows, sketchRel)
-          else rm.writeTable(rows, sketchRel)
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0)) { (batch, _) =>
+        val rows = CorpusStats.kmvMinHashes(batch, "lang", "text", k = 16)
+          .localCheckpoint(true)
+        if (rm.exists(sketchRel)) rm.appendTable(rows, sketchRel)
+        else rm.writeTable(rows, sketchRel)
+      }
       CorpusStats.kmvEstimate(rm.read(sketchRel), "lang", k = 16).orderBy("lang")
     }),
 
@@ -340,15 +295,9 @@ object StreamQueries {
       import graft.relations.RelationManager
       val s2 = s
       import s2.implicits._
-      val landing = Files.createTempDirectory("graft_sann_in")
-      val ckpt = Files.createTempDirectory("graft_sann_ck")
       val vecs = Tables.embeddings(s, d).select("vec_id", "embedding")
       val store = vecs.filter(col("vec_id") % 3 === 0)
       val batchVecs = vecs.filter(col("vec_id") % 3 =!= 0)
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", batchVecs.filter(col("vec_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", batchVecs.filter(col("vec_id") % 2 =!= 0), t0 + 600000L)
-
       val rm = new RelationManager(s, Files.createTempDirectory("graft_sann_wh").toString)
       val centRel = graft.core.Relation("graft", "main", "ann_centroids")
       val boundsRel = graft.core.Relation("graft", "main", "ann_bounds")
@@ -378,23 +327,16 @@ object StreamQueries {
       // bootstrap: the store's own codes and cells
       rm.writeTable(Sq8.encode(store, "vec_id", "embedding", lo0, span0), codesRel)
       rm.writeTable(Ivf.assignCells(store, "vec_id", "embedding", centroids0), cellsRel)
-      val q = s.readStream.schema(batchVecs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // artifacts reloaded per generation — the refresh shape
-          val cents = loadCentroids()
-          val (lo, span) = loadBounds()
-          rm.appendTable(Sq8.encode(batch, "vec_id", "embedding", lo, span)
-            .localCheckpoint(true), codesRel)
-          rm.appendTable(Ivf.assignCells(batch, "vec_id", "embedding", cents)
-            .localCheckpoint(true), cellsRel)
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(batchVecs.filter(col("vec_id") % 2 === 0),
+          batchVecs.filter(col("vec_id") % 2 =!= 0)) { (batch, _) =>
+        // artifacts reloaded per generation — the refresh shape
+        val cents = loadCentroids()
+        val (lo, span) = loadBounds()
+        rm.appendTable(Sq8.encode(batch, "vec_id", "embedding", lo, span)
+          .localCheckpoint(true), codesRel)
+        rm.appendTable(Ivf.assignCells(batch, "vec_id", "embedding", cents)
+          .localCheckpoint(true), cellsRel)
+      }
       val cents = loadCentroids()
       val (lo, span) = loadBounds()
       Sq8.topKWithIvf(vecs.filter(col("vec_id") < 10), vecs,
@@ -428,8 +370,6 @@ object StreamQueries {
       import graft.relations.RelationManager
       val s2 = s
       import s2.implicits._
-      val landing = Files.createTempDirectory("graft_sret_in")
-      val ckpt = Files.createTempDirectory("graft_sret_ck")
       val vecs = Tables.embeddings(s, d).select("vec_id", "embedding")
       val store = vecs.filter(col("vec_id") % 3 === 0)
       val batch1 = vecs.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 2 === 0)
@@ -437,10 +377,6 @@ object StreamQueries {
       // identical in Spark and DuckDB), entirely outside the store's hi
       val batch2 = vecs.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 2 =!= 0)
         .withColumn("embedding", transform(col("embedding"), x => x + lit(2.0f)))
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", batch1, t0)
-      stageAsFile(landing, "1.parquet", batch2, t0 + 600000L)
-
       val rm = new RelationManager(s, Files.createTempDirectory("graft_sret_wh").toString)
       val centRel = graft.core.Relation("graft", "main", "annr_centroids")
       val boundsRel = graft.core.Relation("graft", "main", "annr_bounds")
@@ -476,29 +412,21 @@ object StreamQueries {
       // bootstrap: artifacts + store-of-record from the initial store
       rm.writeTable(store, vecsRel)
       writeArtifacts(store)
-      val q = s.readStream.schema(batch1.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val b = batch.localCheckpoint(true)
-          rm.appendTable(b, vecsRel) // store-of-record first: retrain reads it
-          val (lo, span) = loadBounds()
-          if (Sq8.clampFraction(b, "embedding", lo, span) > 0.2) {
-            // RETRAIN: every artifact re-derived from the accumulated
-            // store; the appended history re-encodes under the new bounds
-            writeArtifacts(rm.read(vecsRel))
-          } else {
-            rm.appendTable(Sq8.encode(b, "vec_id", "embedding", lo, span)
-              .localCheckpoint(true), codesRel)
-            rm.appendTable(Ivf.assignCells(b, "vec_id", "embedding", loadCentroids())
-              .localCheckpoint(true), cellsRel)
-          }
+      stagedIngest(batch1, batch2) { (batch, _) =>
+        val b = batch.localCheckpoint(true)
+        rm.appendTable(b, vecsRel) // store-of-record first: retrain reads it
+        val (lo, span) = loadBounds()
+        if (Sq8.clampFraction(b, "embedding", lo, span) > 0.2) {
+          // RETRAIN: every artifact re-derived from the accumulated
+          // store; the appended history re-encodes under the new bounds
+          writeArtifacts(rm.read(vecsRel))
+        } else {
+          rm.appendTable(Sq8.encode(b, "vec_id", "embedding", lo, span)
+            .localCheckpoint(true), codesRel)
+          rm.appendTable(Ivf.assignCells(b, "vec_id", "embedding", loadCentroids())
+            .localCheckpoint(true), cellsRel)
         }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      }
       val cents = loadCentroids()
       val (lo, span) = loadBounds()
       val all = rm.read(vecsRel)
@@ -523,15 +451,9 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.{Dsir, Sampling}
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_sdsr_in")
-      val ckpt = Files.createTempDirectory("graft_sdsr_ck")
       val docs = Tables.documents(s, d).select("doc_id", "text")
       val ref = docs.filter(col("doc_id") % 3 === 0)
       val batchDocs = docs.filter(col("doc_id") % 3 =!= 0)
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", batchDocs.filter(col("doc_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", batchDocs.filter(col("doc_id") % 2 =!= 0), t0 + 600000L)
-
       val rm = new RelationManager(s, Files.createTempDirectory("graft_sdsr_wh").toString)
       val modelRel = graft.core.Relation("graft", "main", "dsir_model")
       val cutRel = graft.core.Relation("graft", "main", "dsir_cutoff")
@@ -545,20 +467,13 @@ object StreamQueries {
       rm.writeTable(Sampling.scoreCutoff(
         refWeighted.filter(col("n_feats") > 0), "avg_log_weight",
         fraction = 0.25), cutRel)
-      val q = s.readStream.schema(batchDocs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val out = Dsir.selectIngest(batch, "doc_id", "text",
-            rm.read(modelRel), rm.read(cutRel)).localCheckpoint(true)
-          if (rm.exists(outRel)) rm.appendTable(out, outRel)
-          else rm.writeTable(out, outRel)
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(batchDocs.filter(col("doc_id") % 2 === 0),
+          batchDocs.filter(col("doc_id") % 2 =!= 0)) { (batch, _) =>
+        val out = Dsir.selectIngest(batch, "doc_id", "text",
+          rm.read(modelRel), rm.read(cutRel)).localCheckpoint(true)
+        if (rm.exists(outRel)) rm.appendTable(out, outRel)
+        else rm.writeTable(out, outRel)
+      }
       rm.read(outRel)
         .select("doc_id", "n_feats", "log_weight", "avg_log_weight", "dsir_keep")
         .orderBy("doc_id")
@@ -586,37 +501,25 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.{Dedup, Multimodal}
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_shm_in")
-      val ckpt = Files.createTempDirectory("graft_shm_ck")
       val assets = Multimodal.toY4mAssets(Tables.documents(s, d), "doc_id")
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", assets.filter(col("asset_id") % 3 === 0), t0)
-      stageAsFile(landing, "1.parquet", assets.filter(col("asset_id") % 3 =!= 0), t0 + 600000L)
       val rm = new RelationManager(s, Files.createTempDirectory("graft_shm_wh").toString)
       val storeRel = graft.core.Relation("graft", "main", "vfp_store")
       val pairsRel = graft.core.Relation("graft", "main", "hamming_pairs")
       rm.writeTable(Multimodal.videoFingerprintsBatched(assets.limit(0)),
         storeRel) // empty store with the fingerprint schema
-      val q = s.readStream.schema(assets.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // fingerprint the batch ONCE (payload bytes decoded here and
-          // never again — the store holds fingerprints, not media)
-          val sigs = Multimodal.videoFingerprintsBatched(batch)
-            .localCheckpoint(true)
-          val pairs = Dedup.hammingIncremental(sigs, "asset_id", "vfp",
-            rm.read(storeRel), "asset_id", "vfp",
-            maxHamming = 2, nBlocks = 3, blockBits = 16)
-          if (rm.exists(pairsRel)) rm.appendTable(pairs, pairsRel)
-          else rm.writeTable(pairs, pairsRel)
-          rm.appendTable(sigs, storeRel)
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(assets.filter(col("asset_id") % 3 === 0),
+          assets.filter(col("asset_id") % 3 =!= 0)) { (batch, _) =>
+        // fingerprint the batch ONCE (payload bytes decoded here and
+        // never again — the store holds fingerprints, not media)
+        val sigs = Multimodal.videoFingerprintsBatched(batch)
+          .localCheckpoint(true)
+        val pairs = Dedup.hammingIncremental(sigs, "asset_id", "vfp",
+          rm.read(storeRel), "asset_id", "vfp",
+          maxHamming = 2, nBlocks = 3, blockBits = 16)
+        if (rm.exists(pairsRel)) rm.appendTable(pairs, pairsRel)
+        else rm.writeTable(pairs, pairsRel)
+        rm.appendTable(sigs, storeRel)
+      }
       rm.read(pairsRel).orderBy("doc", "store_doc")
     }),
 
@@ -632,12 +535,7 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.Retrieval
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_sri_in")
-      val ckpt = Files.createTempDirectory("graft_sri_ck")
       val docs = Tables.documents(s, d)
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", docs.filter(col("doc_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", docs.filter(col("doc_id") % 2 =!= 0), t0 + 600000L)
       val rm = new RelationManager(s, Files.createTempDirectory("graft_sri_wh").toString)
       val postRel = graft.core.Relation("graft", "main", "posting_store")
       val dlRel = graft.core.Relation("graft", "main", "doclen_store")
@@ -645,33 +543,26 @@ object StreamQueries {
       rm.writeTable(Retrieval.postingIndex(docs.limit(0), "doc_id", "text"), postRel)
       rm.writeTable(Retrieval.docLengths(docs.limit(0), "doc_id", "text"), dlRel)
       rm.writeTable(Retrieval.termStats(docs.limit(0), "text"), tsRel)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          // tokenize the batch once; all three artifacts are
-          // append-only (per-batch term-stats rows are ADDITIVE under
-          // the disjoint-doc-id law — serving sums them, r16).
-          // Replay guard (the StreamingOps.appendToTable discipline): a
-          // batch retried after its commit would otherwise DOUBLE the
-          // tf/dl/df rows and corrupt every downstream score
-          try {
-            if (rm.lastTxn(postRel, "sri_post").forall(_ < batchId))
-              rm.appendTable(Retrieval.postingIndex(batch, "doc_id", "text"),
-                postRel, txn = Map("sri_post" -> batchId))
-            if (rm.lastTxn(dlRel, "sri_dl").forall(_ < batchId))
-              rm.appendTable(Retrieval.docLengths(batch, "doc_id", "text"),
-                dlRel, txn = Map("sri_dl" -> batchId))
-            if (rm.lastTxn(tsRel, "sri_ts").forall(_ < batchId))
-              rm.appendTable(Retrieval.termStats(batch, "text"),
-                tsRel, txn = Map("sri_ts" -> batchId))
-          } catch { case _: graft.relations.StaleTxnException => () }
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0)) { (batch, batchId) =>
+        // tokenize the batch once; all three artifacts are
+        // append-only (per-batch term-stats rows are ADDITIVE under
+        // the disjoint-doc-id law — serving sums them, r16).
+        // Replay guard (the StreamingOps.appendToTable discipline): a
+        // batch retried after its commit would otherwise DOUBLE the
+        // tf/dl/df rows and corrupt every downstream score
+        try {
+          if (rm.lastTxn(postRel, "sri_post").forall(_ < batchId))
+            rm.appendTable(Retrieval.postingIndex(batch, "doc_id", "text"),
+              postRel, txn = Map("sri_post" -> batchId))
+          if (rm.lastTxn(dlRel, "sri_dl").forall(_ < batchId))
+            rm.appendTable(Retrieval.docLengths(batch, "doc_id", "text"),
+              dlRel, txn = Map("sri_dl" -> batchId))
+          if (rm.lastTxn(tsRel, "sri_ts").forall(_ < batchId))
+            rm.appendTable(Retrieval.termStats(batch, "text"),
+              tsRel, txn = Map("sri_ts" -> batchId))
+        } catch { case _: graft.relations.StaleTxnException => () }
+      }
       val queries = Retrieval.prefixQueries(docs, "doc_id", "text",
         modulo = 37, prefixTokens = 6)
       // serve with df from the streamed stats store — the folded rows
@@ -695,17 +586,7 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.Retrieval
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_sgc_in")
-      val ckpt = Files.createTempDirectory("graft_sgc_ck")
       val docs = Tables.documents(s, d)
-      val t0 = 1700000000000L
-      // the CDC feed: docs ≡ 1 (mod 4) depart, split into two disjoint
-      // deletion batches (≡1 and ≡5 mod 8) — the nightly-curation shape
-      stageAsFile(landing, "0.parquet",
-        docs.filter(col("doc_id") % 8 === 1).select("doc_id", "text"), t0)
-      stageAsFile(landing, "1.parquet",
-        docs.filter(col("doc_id") % 8 === 5).select("doc_id", "text"),
-        t0 + 600000L)
       val rm = new RelationManager(s, Files.createTempDirectory("graft_sgc_wh").toString)
       val postRel = graft.core.Relation("graft", "main", "sgc_postings")
       val dlRel = graft.core.Relation("graft", "main", "sgc_doclens")
@@ -720,33 +601,28 @@ object StreamQueries {
           "delete_compaction" -> "false")))
       val cat = rm.catalogName
       val filesBefore = rm.currentState(postRel).get.files.toSet
-      val q = s.readStream.schema(
-          docs.select("doc_id", "text").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          try {
-            // the non-idempotent half first, txn-guarded: negate the
-            // departing docs' own term stats (batches are disjoint by
-            // the CDC contract, so the negation is exact)
-            if (rm.lastTxn(tsRel, "sgc_ts").forall(_ < batchId))
-              rm.appendTable(graft.ops.CorpusStats.negated(
-                Retrieval.termStats(batch, "text"), "df"),
-                tsRel, txn = Map("sgc_ts" -> batchId))
-            // row-level MoR deletes: idempotent under replay
-            batch.select("doc_id").createOrReplaceTempView("sgc_departing")
-            batch.sparkSession.sql(s"DELETE FROM $cat.main.sgc_postings " +
-              "WHERE doc_id IN (SELECT doc_id FROM sgc_departing)")
-            batch.sparkSession.sql(s"DELETE FROM $cat.main.sgc_doclens " +
-              "WHERE doc_id IN (SELECT doc_id FROM sgc_departing)")
-            ()
-          } catch { case _: graft.relations.StaleTxnException => () }
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      // the CDC feed: docs ≡ 1 (mod 4) depart, split into two disjoint
+      // deletion batches (≡1 and ≡5 mod 8) — the nightly-curation shape
+      val departing = docs.select("doc_id", "text")
+      stagedIngest(departing.filter(col("doc_id") % 8 === 1),
+          departing.filter(col("doc_id") % 8 === 5)) { (batch, batchId) =>
+        try {
+          // the non-idempotent half first, txn-guarded: negate the
+          // departing docs' own term stats (batches are disjoint by
+          // the CDC contract, so the negation is exact)
+          if (rm.lastTxn(tsRel, "sgc_ts").forall(_ < batchId))
+            rm.appendTable(graft.ops.CorpusStats.negated(
+              Retrieval.termStats(batch, "text"), "df"),
+              tsRel, txn = Map("sgc_ts" -> batchId))
+          // row-level MoR deletes: idempotent under replay
+          batch.select("doc_id").createOrReplaceTempView("sgc_departing")
+          batch.sparkSession.sql(s"DELETE FROM $cat.main.sgc_postings " +
+            "WHERE doc_id IN (SELECT doc_id FROM sgc_departing)")
+          batch.sparkSession.sql(s"DELETE FROM $cat.main.sgc_doclens " +
+            "WHERE doc_id IN (SELECT doc_id FROM sgc_departing)")
+          ()
+        } catch { case _: graft.relations.StaleTxnException => () }
+      }
       s.catalog.dropTempView("sgc_departing")
       // MoR receipts: no posting data file rewritten; delete files
       // attached; the Σdf == live-rows invariant held through the feed
@@ -774,33 +650,21 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.Retrieval
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_sph_in")
-      val ckpt = Files.createTempDirectory("graft_sph_ck")
       val docs = Tables.documents(s, d)
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", docs.filter(col("doc_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", docs.filter(col("doc_id") % 2 =!= 0), t0 + 600000L)
       val rm = new RelationManager(s, Files.createTempDirectory("graft_sph_wh").toString)
       val idxRel = graft.core.Relation("graft", "main", "positional_store")
       rm.writeTable(Retrieval.positionalIndex(docs.limit(0), "doc_id", "text"), idxRel)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          // replay guard: a duplicated (term, doc) positional row would
-          // make phraseMatch's offset-completeness check REJECT the doc
-          // (silent match loss, not just dup output)
-          try {
-            if (rm.lastTxn(idxRel, "sph_idx").forall(_ < batchId))
-              rm.appendTable(Retrieval.positionalIndex(batch, "doc_id", "text"),
-                idxRel, txn = Map("sph_idx" -> batchId))
-          } catch { case _: graft.relations.StaleTxnException => () }
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0)) { (batch, batchId) =>
+        // replay guard: a duplicated (term, doc) positional row would
+        // make phraseMatch's offset-completeness check REJECT the doc
+        // (silent match loss, not just dup output)
+        try {
+          if (rm.lastTxn(idxRel, "sph_idx").forall(_ < batchId))
+            rm.appendTable(Retrieval.positionalIndex(batch, "doc_id", "text"),
+              idxRel, txn = Map("sph_idx" -> batchId))
+        } catch { case _: graft.relations.StaleTxnException => () }
+      }
       val queries = docs.filter(col("doc_id") % 53 === 0)
         .filter(size(graft.ops.TextAnalysis.tokens(col("text"))) >= 3)
         .select(col("doc_id").as("query_id"),
@@ -825,39 +689,27 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.{CorpusStats, TextAnalysis}
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_shq_in")
-      val ckpt = Files.createTempDirectory("graft_shq_ck")
       val docs = Tables.documents(s, d)
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", docs.filter(col("doc_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", docs.filter(col("doc_id") % 2 =!= 0), t0 + 600000L)
       val rm = new RelationManager(s, Files.createTempDirectory("graft_shq_wh").toString)
       val hRel = graft.core.Relation("graft", "main", "hist_store")
       def vals(f: org.apache.spark.sql.DataFrame) =
         f.select((TextAnalysis.tokenCount(col("text"))
           .cast(org.apache.spark.sql.types.LongType) * col("doc_id")).as("v"))
       rm.writeTable(CorpusStats.histogramSketch(vals(docs.limit(0)), "v"), hRel)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          // read-merge-WRITE sink: the replay guard keeps a retried
-          // batch from double-counting its documents
-          try {
-            if (rm.lastTxn(hRel, "shq").forall(_ < batchId)) {
-              val folded = CorpusStats.histogramMerge(2,
-                rm.read(hRel),
-                CorpusStats.histogramSketch(vals(batch), "v"))
-              rm.writeTable(folded.localCheckpoint(true), hRel,
-                txn = Map("shq" -> batchId))
-            }
-          } catch { case _: graft.relations.StaleTxnException => () }
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0)) { (batch, batchId) =>
+        // read-merge-WRITE sink: the replay guard keeps a retried
+        // batch from double-counting its documents
+        try {
+          if (rm.lastTxn(hRel, "shq").forall(_ < batchId)) {
+            val folded = CorpusStats.histogramMerge(2,
+              rm.read(hRel),
+              CorpusStats.histogramSketch(vals(batch), "v"))
+            rm.writeTable(folded.localCheckpoint(true), hRel,
+              txn = Map("shq" -> batchId))
+          }
+        } catch { case _: graft.relations.StaleTxnException => () }
+      }
       CorpusStats.histogramQuantiles(rm.read(hRel), Seq(0.5, 0.9, 0.99))
         .orderBy("q")
     }),
@@ -866,39 +718,27 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.CorpusStats
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_scms_in")
-      val ckpt = Files.createTempDirectory("graft_scms_ck")
       val docs = Tables.documents(s, d)
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", docs.filter(col("doc_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", docs.filter(col("doc_id") % 2 =!= 0), t0 + 600000L)
       val rm = new RelationManager(s, Files.createTempDirectory("graft_scms_wh").toString)
       val skRel = graft.core.Relation("graft", "main", "cms_store")
       rm.writeTable(CorpusStats.cmsSketch(docs.limit(0), "text",
         depth = 4, width = 2048), skRel)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          // replay guard: this sink is read-merge-WRITE, so an unguarded
-          // retry would permanently double-count the batch's tokens (an
-          // over-count the sketch's one-sided error masks but the gate's
-          // oracle would catch)
-          try {
-            if (rm.lastTxn(skRel, "scms").forall(_ < batchId)) {
-              val folded = CorpusStats.cmsMerge(4, 2048,
-                rm.read(skRel),
-                CorpusStats.cmsSketch(batch, "text", depth = 4, width = 2048))
-              rm.writeTable(folded.localCheckpoint(true), skRel,
-                txn = Map("scms" -> batchId))
-            }
-          } catch { case _: graft.relations.StaleTxnException => () }
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0)) { (batch, batchId) =>
+        // replay guard: this sink is read-merge-WRITE, so an unguarded
+        // retry would permanently double-count the batch's tokens (an
+        // over-count the sketch's one-sided error masks but the gate's
+        // oracle would catch)
+        try {
+          if (rm.lastTxn(skRel, "scms").forall(_ < batchId)) {
+            val folded = CorpusStats.cmsMerge(4, 2048,
+              rm.read(skRel),
+              CorpusStats.cmsSketch(batch, "text", depth = 4, width = 2048))
+            rm.writeTable(folded.localCheckpoint(true), skRel,
+              txn = Map("scms" -> batchId))
+          }
+        } catch { case _: graft.relations.StaleTxnException => () }
+      }
       val probes = docs.filter(col("doc_id") % 101 === 0)
         .select(explode(graft.ops.TextAnalysis.tokens(col("text"))).as("tok"))
       val exact = docs.select(explode(graft.ops.TextAnalysis.tokens(col("text"))).as("tok"))
@@ -924,16 +764,11 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.{Dedup, Multimodal}
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_sfd_in")
-      val ckpt = Files.createTempDirectory("graft_sfd_ck")
       val docs = Tables.documents(s, d)
       val bases = Multimodal.toY4mAssets(docs, "doc_id")
       val trims = Multimodal.toY4mTrimmedAssets(
         docs.filter(col("doc_id") % 100 === 5), "doc_id",
         dropFrames = 9, idOffset = 1000000L)
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", bases, t0)
-      stageAsFile(landing, "1.parquet", trims, t0 + 600000L)
       val rm = new RelationManager(s, Files.createTempDirectory("graft_sfd_wh").toString)
       val storeRel = graft.core.Relation("graft", "main", "frame_key_store")
       val sizesRel = graft.core.Relation("graft", "main", "frame_key_sizes")
@@ -949,42 +784,34 @@ object StreamQueries {
         keysOf(bases.limit(0)), "asset_id", "mean_luma",
         keysOf(bases.limit(0)), "asset_id", "mean_luma",
         minOverlap = 0.9), pairsRel)
-      val q = s.readStream.schema(bases.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          // decode + frame-sample the batch ONCE; the store holds frame
-          // keys and per-asset key counts, never media bytes.
-          // Replay guard (the StreamingOps.appendToTable discipline):
-          // a retried batch would otherwise double-append store keys —
-          // and with storeKeysDistinct=true the duplicated store rows
-          // silently inflate n_shared and emit wrong/duplicate pairs
-          val keys = keysOf(batch).localCheckpoint(true)
-          val pairs = Dedup.setOverlapIncremental(
-            keys, "asset_id", "mean_luma",
-            rm.read(storeRel), "asset_id", "mean_luma",
-            minOverlap = 0.9,
-            storeSizes = Some(rm.read(sizesRel)),
-            // every batch appends its DISTINCT keys under new asset ids,
-            // so the store stays distinct — skip the defensive dedup's
-            // O(store) exchange
-            storeKeysDistinct = true)
-          try {
-            if (rm.lastTxn(pairsRel, "sfd_pairs").forall(_ < batchId))
-              rm.appendTable(pairs, pairsRel, txn = Map("sfd_pairs" -> batchId))
-            if (rm.lastTxn(storeRel, "sfd_keys").forall(_ < batchId))
-              rm.appendTable(keys, storeRel, txn = Map("sfd_keys" -> batchId))
-            if (rm.lastTxn(sizesRel, "sfd_sizes").forall(_ < batchId))
-              rm.appendTable(
-                keys.groupBy("asset_id").agg(count(lit(1)).as("n_keys")),
-                sizesRel, txn = Map("sfd_sizes" -> batchId))
-          } catch { case _: graft.relations.StaleTxnException => () }
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(bases, trims) { (batch, batchId) =>
+        // decode + frame-sample the batch ONCE; the store holds frame
+        // keys and per-asset key counts, never media bytes.
+        // Replay guard (the StreamingOps.appendToTable discipline):
+        // a retried batch would otherwise double-append store keys —
+        // and with storeKeysDistinct=true the duplicated store rows
+        // silently inflate n_shared and emit wrong/duplicate pairs
+        val keys = keysOf(batch).localCheckpoint(true)
+        val pairs = Dedup.setOverlapIncremental(
+          keys, "asset_id", "mean_luma",
+          rm.read(storeRel), "asset_id", "mean_luma",
+          minOverlap = 0.9,
+          storeSizes = Some(rm.read(sizesRel)),
+          // every batch appends its DISTINCT keys under new asset ids,
+          // so the store stays distinct — skip the defensive dedup's
+          // O(store) exchange
+          storeKeysDistinct = true)
+        try {
+          if (rm.lastTxn(pairsRel, "sfd_pairs").forall(_ < batchId))
+            rm.appendTable(pairs, pairsRel, txn = Map("sfd_pairs" -> batchId))
+          if (rm.lastTxn(storeRel, "sfd_keys").forall(_ < batchId))
+            rm.appendTable(keys, storeRel, txn = Map("sfd_keys" -> batchId))
+          if (rm.lastTxn(sizesRel, "sfd_sizes").forall(_ < batchId))
+            rm.appendTable(
+              keys.groupBy("asset_id").agg(count(lit(1)).as("n_keys")),
+              sizesRel, txn = Map("sfd_sizes" -> batchId))
+        } catch { case _: graft.relations.StaleTxnException => () }
+      }
       rm.read(pairsRel).orderBy("doc", "store_doc")
     }),
 
@@ -1002,39 +829,26 @@ object StreamQueries {
       import graft.ops.Dedup
       import graft.relations.RelationManager
       import graft.materializations.Materializations
-      val landing = Files.createTempDirectory("graft_sci_in")
-      val ckpt = Files.createTempDirectory("graft_sci_ck")
       val docs = Tables.documents(s, d)
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
         shingleLen = 5, k = 32, bands = 8, threshold = 0.5)
         .select("doc_a", "doc_b")
         .localCheckpoint(true)
       val gen = pmod(col("doc_a") + col("doc_b"), lit(2))
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", pairs.filter(gen === 0), t0)
-      stageAsFile(landing, "1.parquet", pairs.filter(gen =!= 0), t0 + 600000L)
       val rm = new RelationManager(s, Files.createTempDirectory("graft_sci_wh").toString)
       val assignRel = graft.core.Relation("graft", "main", "cluster_assignment")
       rm.writeTable(pairs.limit(0)
         .select(col("doc_a").as("node"), col("doc_b").as("component")), assignRel)
-      val q = s.readStream.schema(pairs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // pin the delta once: mergeInto consumes its source several
-          // times (key bounds, planning scan, update/insert branches)
-          val delta = Dedup.connectedComponentsIncremental(
-            rm.read(assignRel), "node", "component",
-            batch, "doc_a", "doc_b", deltaOnly = true)
-            .localCheckpoint(true)
-          Materializations.mergeInto(rm, assignRel, delta,
-            uniqueKey = Seq("node"), updateColumns = Seq("component"))
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(pairs.filter(gen === 0), pairs.filter(gen =!= 0)) { (batch, _) =>
+        // pin the delta once: mergeInto consumes its source several
+        // times (key bounds, planning scan, update/insert branches)
+        val delta = Dedup.connectedComponentsIncremental(
+          rm.read(assignRel), "node", "component",
+          batch, "doc_a", "doc_b", deltaOnly = true)
+          .localCheckpoint(true)
+        Materializations.mergeInto(rm, assignRel, delta,
+          uniqueKey = Seq("node"), updateColumns = Seq("component"))
+      }
       val comp = rm.read(assignRel)
       val labeled = docs.select(col("doc_id").as("doc"))
         .join(comp.withColumnRenamed("node", "doc"), Seq("doc"), "left")
@@ -1060,12 +874,7 @@ object StreamQueries {
       import graft.ops.{Dedup, TextAnalysis}
       import graft.relations.RelationManager
       import graft.materializations.Materializations
-      val landing = Files.createTempDirectory("graft_skb_in")
-      val ckpt = Files.createTempDirectory("graft_skb_ck")
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", docs.filter(col("doc_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", docs.filter(col("doc_id") % 2 =!= 0), t0 + 600000L)
       val rm = new RelationManager(s, Files.createTempDirectory("graft_skb_wh").toString)
       val sigRel = graft.core.Relation("graft", "main", "sig_store")
       val survRel = graft.core.Relation("graft", "main", "survivors")
@@ -1077,48 +886,41 @@ object StreamQueries {
         "doc_id", "quality",
         docs.limit(0).select(col("doc_id").as("node"), col("doc_id").as("component"))),
         survRel)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          // fingerprint + score the batch ONCE
-          val batch = batch0.localCheckpoint(true)
-          val sigs = Dedup.minhashSignatures(batch, "doc_id", "text", 5, 32)
-            .localCheckpoint(true)
-          val cross = Dedup.minhashIncremental(batch, "doc_id", "text",
-            rm.read(sigRel), "doc", "sig",
-            shingleLen = 5, k = 32, bands = 8, threshold = 0.5,
-            precomputedNewSigs = Some(sigs))
-            .select(col("doc").as("doc_a"), col("corpus_doc").as("doc_b"))
-          val inner = Dedup.minhashLshPairs(batch, "doc_id", "text",
-            shingleLen = 5, k = 32, bands = 8, threshold = 0.5,
-            precomputedSigs = Some(sigs))
-            .select("doc_a", "doc_b")
-          val scored = batch.select(col("doc_id"),
-            TextAnalysis.qualityScore(col("text")).as("quality"))
-          // pin the delta once: mergeInto consumes its source several
-          // times (key bounds, planning scan, update/insert branches)
-          val delta = Dedup.keepBestIncremental(
-            rm.read(survRel), "doc_id", "quality",
-            scored, cross.unionByName(inner), "doc_a", "doc_b",
-            deltaOnly = true)
-            .localCheckpoint(true)
-          Materializations.mergeInto(rm, survRel, delta,
-            uniqueKey = Seq("doc_id"), updateColumns = Nil)
-          // replay guard: the survivor upsert above is idempotent
-          // (mergeInto), but a replayed batch would double the
-          // signature-store rows, doubling band-join candidates on
-          // every later batch
-          try {
-            if (rm.lastTxn(sigRel, "skb_sigs").forall(_ < batchId))
-              rm.appendTable(sigs, sigRel, txn = Map("skb_sigs" -> batchId))
-          } catch { case _: graft.relations.StaleTxnException => () }
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0)) { (batch0, batchId) =>
+        // fingerprint + score the batch ONCE
+        val batch = batch0.localCheckpoint(true)
+        val sigs = Dedup.minhashSignatures(batch, "doc_id", "text", 5, 32)
+          .localCheckpoint(true)
+        val cross = Dedup.minhashIncremental(batch, "doc_id", "text",
+          rm.read(sigRel), "doc", "sig",
+          shingleLen = 5, k = 32, bands = 8, threshold = 0.5,
+          precomputedNewSigs = Some(sigs))
+          .select(col("doc").as("doc_a"), col("corpus_doc").as("doc_b"))
+        val inner = Dedup.minhashLshPairs(batch, "doc_id", "text",
+          shingleLen = 5, k = 32, bands = 8, threshold = 0.5,
+          precomputedSigs = Some(sigs))
+          .select("doc_a", "doc_b")
+        val scored = batch.select(col("doc_id"),
+          TextAnalysis.qualityScore(col("text")).as("quality"))
+        // pin the delta once: mergeInto consumes its source several
+        // times (key bounds, planning scan, update/insert branches)
+        val delta = Dedup.keepBestIncremental(
+          rm.read(survRel), "doc_id", "quality",
+          scored, cross.unionByName(inner), "doc_a", "doc_b",
+          deltaOnly = true)
+          .localCheckpoint(true)
+        Materializations.mergeInto(rm, survRel, delta,
+          uniqueKey = Seq("doc_id"), updateColumns = Nil)
+        // replay guard: the survivor upsert above is idempotent
+        // (mergeInto), but a replayed batch would double the
+        // signature-store rows, doubling band-join candidates on
+        // every later batch
+        try {
+          if (rm.lastTxn(sigRel, "skb_sigs").forall(_ < batchId))
+            rm.appendTable(sigs, sigRel, txn = Map("skb_sigs" -> batchId))
+        } catch { case _: graft.relations.StaleTxnException => () }
+      }
       rm.read(survRel).orderBy("doc_id")
     }),
 
@@ -1126,36 +928,22 @@ object StreamQueries {
       import java.nio.file.Files
       import graft.ops.Dedup
       import graft.relations.RelationManager
-      val landing = Files.createTempDirectory("graft_snd_in")
-      val ckpt = Files.createTempDirectory("graft_snd_ck")
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      // the file source batches oldest-modified first
-      val t0 = 1700000000000L
-      stageAsFile(landing, "0.parquet", docs.filter(col("doc_id") % 2 === 0), t0)
-      stageAsFile(landing, "1.parquet", docs.filter(col("doc_id") % 2 =!= 0), t0 + 600000L)
-
       val rm = new RelationManager(s, Files.createTempDirectory("graft_snd_wh").toString)
       val storeRel = graft.core.Relation("graft", "main", "sig_store")
       val pairsRel = graft.core.Relation("graft", "main", "neardup_pairs")
       rm.writeTable(Dedup.minhashSignatures(docs.limit(0), "doc_id", "text", 5, 32),
         storeRel) // empty store with the signature schema
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val store = rm.read(storeRel)
-          val pairs = Dedup.minhashIncremental(batch, "doc_id", "text",
-            store, "doc", "sig", shingleLen = 5, k = 32, bands = 8, threshold = 0.5)
-          if (rm.exists(pairsRel)) rm.appendTable(pairs, pairsRel)
-          else rm.writeTable(pairs, pairsRel)
-          rm.appendTable(
-            Dedup.minhashSignatures(batch, "doc_id", "text", 5, 32), storeRel)
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      deleteRecursively(landing); deleteRecursively(ckpt)
+      stagedIngest(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0)) { (batch, _) =>
+        val store = rm.read(storeRel)
+        val pairs = Dedup.minhashIncremental(batch, "doc_id", "text",
+          store, "doc", "sig", shingleLen = 5, k = 32, bands = 8, threshold = 0.5)
+        if (rm.exists(pairsRel)) rm.appendTable(pairs, pairsRel)
+        else rm.writeTable(pairs, pairsRel)
+        rm.appendTable(
+          Dedup.minhashSignatures(batch, "doc_id", "text", 5, 32), storeRel)
+      }
       rm.read(pairsRel).orderBy("doc", "corpus_doc")
     })
   )

@@ -975,7 +975,7 @@ object TermAgg {
   /** One-pass per-document term counting. UTF8String keys reference the
     * input buffer — valid for the duration of the call and copied by the
     * consuming projection, the standard slice-returning-expression
-    * contract. */
+    * contract (TermAggParity in RetrievalSpec pins it). */
   def counts(toks: ArrayData): ArrayData = {
     val n = toks.numElements()
     val map = new java.util.LinkedHashMap[UTF8String, Array[Long]](

@@ -19,7 +19,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
-import graft.relations.{CommitLog, LocalFileStore, TableVersion}
+import graft.relations.{CommitLog, TableVersion}
 
 /** DataSource V2 connector for graft commit-log tables:
   *
@@ -87,26 +87,11 @@ object GraftSourceTable {
     StructField("file", StringType, nullable = false),
     StructField("pos", org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** Store for the connector's manifest and plan-time file I/O. Pluggable
-    * via `spark.graft.filestore` for warehouses on an object store:
-    * `local` (default), `hadoop` ([[graft.relations.HadoopFileStore]] —
-    * resolves each path's FileSystem through the session Hadoop conf), or
-    * a FileStore class name with a no-arg constructor. */
-  def store(dir: String): graft.relations.FileStore = {
-    val conf =
-      try org.apache.spark.sql.SparkSession.active.conf
-        .get("spark.graft.filestore", "auto")
-      catch { case _: IllegalStateException => "auto" } // no active session
-    conf match {
-      // auto: derived from the TABLE PATH's shape — URI dirs (s3a://…)
-      // route through the Hadoop FS API with zero configuration
-      case "" | "auto"  => graft.relations.FileStore.forRoot(dir)
-      case "local"      => new LocalFileStore
-      case "hadoop"     => new graft.relations.HadoopFileStore()
-      case cls => Class.forName(cls).getDeclaredConstructor()
-        .newInstance().asInstanceOf[graft.relations.FileStore]
-    }
-  }
+  /** Store for the connector's manifest and plan-time file I/O, derived
+    * from the table path's shape: URI dirs (s3a://…) route through the
+    * Hadoop FS API, plain paths use the local store. */
+  def store(dir: String): graft.relations.FileStore =
+    graft.relations.FileStore.forRoot(dir)
 
   def log(dir: String): CommitLog =
     new CommitLog(store(dir), graft.relations.WarehouseIO.join(dir, "_graft_log"))

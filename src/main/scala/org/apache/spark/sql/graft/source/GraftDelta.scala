@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
-import graft.relations.{ColStats, TableVersion}
+import graft.relations.{ColStats, TableVersion, WarehouseIO}
 
 /** Merge-on-read (delta-based) row-level operations — the
   * `SupportsDelta` twin of [[GraftRowLevelOperation]]'s copy-on-write,
@@ -123,7 +123,7 @@ class GraftDeltaWrite(dir: String, writeSchema: StructType,
       // operation-statement replay guard (r18): a resumed run re-running
       // an already-committed DML statement skips the publish outright
       if (GraftOpTxn.alreadyCommitted(GraftSourceTable.log(dir))) {
-        GraftPublish.deleteDir(stageDir); return
+        WarehouseIO.deleteDir(stageDir); return
       }
       val msgs = messages.collect { case m: GraftDeltaCommitMessage => m }
       val written = msgs.flatMap(_.dataFiles)
@@ -135,11 +135,11 @@ class GraftDeltaWrite(dir: String, writeSchema: StructType,
       // zero-match DML statement; replaying a no-op is a no-op, so the
       // dropped replay-guard watermark costs nothing
       if (dataFiles.isEmpty && deleteFiles.isEmpty) {
-        GraftPublish.deleteDir(stageDir); return
+        WarehouseIO.deleteDir(stageDir); return
       }
       GraftPublish.publish(dir, stageDir, dataFiles ++ deleteFiles,
         GraftSourceTable.store(dir))
-      GraftPublish.deleteDir(stageDir)
+      WarehouseIO.deleteDir(stageDir)
       val attach: Map[String, Seq[String]] = msgs
         .flatMap(m => m.deleteFile.toSeq.flatMap(df => m.touched.map(_._1 -> df)))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSeq.distinct).toMap
@@ -186,7 +186,7 @@ class GraftDeltaWrite(dir: String, writeSchema: StructType,
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      GraftPublish.deleteDir(stageDir)
+      WarehouseIO.deleteDir(stageDir)
   }
 }
 

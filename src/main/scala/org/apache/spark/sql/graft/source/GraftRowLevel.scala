@@ -143,7 +143,7 @@ class GraftReplaceWrite(dir: String, writeSchema: StructType,
       // operation-statement replay guard (r18): a resumed run re-running
       // an already-committed DML statement skips the rewrite outright
       if (GraftOpTxn.alreadyCommitted(GraftSourceTable.log(dir))) {
-        GraftPublish.deleteDir(stageDir); return
+        graft.relations.WarehouseIO.deleteDir(stageDir); return
       }
       val written = messages.collect { case m: GraftCommitMessage => m.files }.flatten
       val files = written.map(_._1)
@@ -151,10 +151,10 @@ class GraftReplaceWrite(dir: String, writeSchema: StructType,
       // nothing rewritten AND nothing scanned-for-replacement: the DML
       // matched no rows — skip the no-op commit (see GraftDelta)
       if (files.isEmpty && removed.isEmpty) {
-        GraftPublish.deleteDir(stageDir); return
+        graft.relations.WarehouseIO.deleteDir(stageDir); return
       }
       GraftPublish.publish(dir, stageDir, files, GraftSourceTable.store(dir))
-      GraftPublish.deleteDir(stageDir)
+      graft.relations.WarehouseIO.deleteDir(stageDir)
       // Write-write conflict detection: this DML read `removed` and is
       // about to replace it. The transform runs INSIDE the commit CAS
       // retry against the latest state, so if another commit replaced any
@@ -196,6 +196,6 @@ class GraftReplaceWrite(dir: String, writeSchema: StructType,
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      GraftPublish.deleteDir(stageDir)
+      graft.relations.WarehouseIO.deleteDir(stageDir)
   }
 }

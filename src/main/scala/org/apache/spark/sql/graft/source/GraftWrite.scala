@@ -135,8 +135,6 @@ private[source] object GraftPublish {
       store.moveFile(WarehouseIO.join(stageDir, f), WarehouseIO.join(dir, f))
     }
 
-  def deleteDir(p: String): Unit = WarehouseIO.deleteDir(p)
-
   /** The replacement key for dynamic overwrite is the LOGICAL partition:
     * bucket layout dirs don't count (same rule as the engine's
     * commitStagedPartitions). */
@@ -189,7 +187,7 @@ class GraftBatchWrite(dir: String, st: TableVersion, writeSchema: StructType,
     // operation-statement replay guard (r18): a resumed run re-running an
     // already-committed statement skips — same shape as the streaming
     // sink's epoch fast path; the CAS txn check stays authoritative
-    if (GraftOpTxn.alreadyCommitted(log)) { GraftPublish.deleteDir(stageDir); return }
+    if (GraftOpTxn.alreadyCommitted(log)) { WarehouseIO.deleteDir(stageDir); return }
     val written = messages.collect { case m: GraftCommitMessage => m.files }.flatten
     val files = written.map(_._1)
     // a zero-row APPEND is a provable no-op: committing it would bump
@@ -200,17 +198,17 @@ class GraftBatchWrite(dir: String, st: TableVersion, writeSchema: StructType,
     // commit (it removes rows). Skipping also drops the statement's
     // replay-guard watermark — harmless: replaying a no-op is a no-op.
     if (files.isEmpty && mode == GraftWriteMode.Append) {
-      GraftPublish.deleteDir(stageDir); return
+      WarehouseIO.deleteDir(stageDir); return
     }
     GraftPublish.publish(dir, stageDir, files, GraftSourceTable.store(dir))
-    GraftPublish.deleteDir(stageDir)
+    WarehouseIO.deleteDir(stageDir)
     try log.commit(None, None, None, None, written.toMap, GraftOpTxn.current)(
       GraftPublish.transformFor(mode, files))
     catch { case _: graft.relations.StaleTxnException => () }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftPublish.deleteDir(stageDir)
+    WarehouseIO.deleteDir(stageDir)
 }
 
 /** Exactly-once streaming sink (`df.writeStream.format("graft")`): each
@@ -238,11 +236,11 @@ class GraftStreamingWrite(dir: String, st: TableVersion, writeSchema: StructType
     // fast path: a known-replayed epoch skips publishing entirely
     val replayed = log.currentVersion.map(log.read)
       .flatMap(_.txn.get(appId)).exists(_ >= epochId)
-    if (replayed) { GraftPublish.deleteDir(epochDir); return }
+    if (replayed) { WarehouseIO.deleteDir(epochDir); return }
     val written = messages.collect { case m: GraftCommitMessage => m.files }.flatten
     val files = written.map(_._1)
     GraftPublish.publish(dir, epochDir, files, GraftSourceTable.store(dir))
-    GraftPublish.deleteDir(epochDir)
+    WarehouseIO.deleteDir(epochDir)
     // the AUTHORITATIVE exactly-once gate is the log's own txn check
     // inside the commit CAS — a zombie of this query racing its restart
     // both pass the fast path, but only one commit lands; the loser's
@@ -253,7 +251,7 @@ class GraftStreamingWrite(dir: String, st: TableVersion, writeSchema: StructType
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftPublish.deleteDir(WarehouseIO.join(stageBase, s"e$epochId"))
+    WarehouseIO.deleteDir(WarehouseIO.join(stageBase, s"e$epochId"))
 }
 
 case class GraftStreamingWriterFactory(base: GraftWriterFactory)

@@ -35,6 +35,22 @@ class CoreQueriesSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"queries without oracle: $missing")
   }
 
+  test("a project gate restores the nanos conf and drops its corpus views") {
+    // Main.execute sets nanosAsLong and registers a corpus_* view per
+    // fixture table; the gate must hand the shared session back as it was
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val was = spark.conf.get(key)
+    def corpusViews = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("corpus_")).toSeq
+    try {
+      spark.conf.set(key, "false")
+      corpusViews.foreach(spark.catalog.dropTempView)
+      assert(SparkEntry.queries("q_retrieval_project")(spark, sf).count() > 0)
+      assert(spark.conf.get(key) == "false")
+      assert(corpusViews.isEmpty, s"views left behind: $corpusViews")
+    } finally spark.conf.set(key, was)
+  }
+
   test("q1 aggregates are stable across repartition (order-insensitive sums)") {
     val base = SparkEntry.queries("q1_pricing_summary")(spark, sf).collect()
     val re = Tables.lineitem(spark, sf).repartition(7)

@@ -606,6 +606,61 @@ class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("TermAggParity: term counts and positions over a parquet scan survive buffering consumers") {
+    // TermAgg's keys reference the token array it was handed. Tokens read
+    // back from parquet as array<string> come out of the vectorized
+    // reader's column vectors, which are refilled for every batch; an
+    // 8-row batch makes every consumer below outlive several refills. The
+    // collect_list and sort consumers buffer rows across batches, so a key
+    // left pointing into a refilled vector would surface as a wrong term.
+    import org.apache.spark.sql.graft.VectorExpressions
+    val dir = java.nio.file.Files.createTempDirectory("graft_termagg").toString
+    val batchKey = "spark.sql.parquet.columnarReaderBatchSize"
+    val batchWas = spark.conf.get(batchKey)
+    try {
+      // 1 to 17 tokens per doc over an 11-term vocabulary, so terms repeat
+      spark.range(0, 500).select(col("id").as("doc_id"),
+          transform(sequence(lit(0L), col("id") % 17),
+            i => concat(lit("t"), ((col("id") + i * i) % 11).cast("string"))).as("toks"))
+        .write.mode("overwrite").parquet(dir)
+      spark.conf.set(batchKey, "8")
+      val scan = spark.read.parquet(dir)
+      def perDoc(rows: DataFrame, value: String): Array[(Long, Seq[String])] =
+        rows.groupBy("doc_id")
+          .agg(sort_array(collect_list(concat_ws("=", col("term"), col(value)))).as("v"))
+          .orderBy("doc_id").collect()
+          .map(r => (r.getLong(0), r.getSeq[String](1)))
+      val counts = scan.select(col("doc_id"),
+          explode(VectorExpressions.termCounts(col("toks"))).as("tc"))
+        .select(col("doc_id"), col("tc.term").as("term"), col("tc.tf").cast("string").as("tf"))
+      val countsRef = scan.select(col("doc_id"), explode(col("toks")).as("term"))
+        .groupBy("doc_id", "term").agg(count(lit(1)).cast("string").as("tf"))
+      val expected = perDoc(countsRef, "tf")
+      assert(expected.nonEmpty, "parity fixture produced no terms")
+      assert(perDoc(counts, "tf").sameElements(expected),
+        "termCounts under collect_list diverges from the groupBy form")
+      // a sort buffers the whole partition before it emits a row
+      val sorted = counts.orderBy("doc_id", "term").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      val sortedRef = countsRef.orderBy("doc_id", "term").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      assert(sorted.sameElements(sortedRef),
+        "termCounts under a sort diverges from the groupBy form")
+      val positions = scan.select(col("doc_id"),
+          explode(VectorExpressions.termPositions(col("toks"))).as("tp"))
+        .select(col("doc_id"), col("tp.term").as("term"),
+          array_join(col("tp.positions"), ",").as("pos"))
+      val positionsRef = scan.select(col("doc_id"), posexplode(col("toks")).as(Seq("p", "term")))
+        .groupBy("doc_id", "term")
+        .agg(array_join(sort_array(collect_list(col("p") + 1)), ",").as("pos"))
+      assert(perDoc(positions, "pos").sameElements(perDoc(positionsRef, "pos")),
+        "termPositions under collect_list diverges from the groupBy form")
+    } finally {
+      spark.conf.set(batchKey, batchWas)
+      queries.OpsQueries.deleteDir(dir)
+    }
+  }
+
   test("plan shape: postings probe is a broadcast hash join, no cartesian corpus join") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val q = docs.filter(col("doc_id") % 37 === 0)
