@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * relations (reference: core/dbt/context/providers.py:1151); here a
   * source resolves to a parquet path under the scale-factor dir.
   *
-  * Scale notes: every reader goes through `spark.read.parquet`, so
+  * Scale notes: every reader goes through [[readParquet]], so
   * Catalyst's vectorized parquet scan, predicate pushdown, and column
   * pruning apply unchanged whether the path is a 6k-row local file or
   * a 100 TB partitioned table on object storage.
@@ -21,7 +21,18 @@ object Tables {
   val broadcastable: Set[String] = Set("region", "nation", "supplier", "part", "customer")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    readParquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job: a
+    * single file's schema comes from its footer on the driver (the same
+    * conversion inference runs); a directory keeps Spark's multi-file
+    * listing and merge rules. The one reader of every source table and
+    * every project source. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    org.apache.spark.sql.execution.datasources.parquet.FooterSchema.of(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -58,23 +58,18 @@ object Project {
     require(Files.isDirectory(root), s"not a project dir: $dir")
     val conf = loadConf(root.resolve("graft_project.conf"))
 
-    def sqlFiles(sub: String): Seq[(String, Path)] = {
-      val d = root.resolve(sub)
-      if (!Files.isDirectory(d)) Nil
-      else Files.walk(d).iterator().asScala
-        .filter(p => p.toString.endsWith(".sql"))
-        .map(p => stem(p) -> p).toSeq.sortBy(_._1)
-    }
+    def sqlOf(paths: Seq[Path]): Seq[(String, Path)] =
+      paths.filter(_.toString.endsWith(".sql")).map(p => stem(p) -> p).sortBy(_._1)
+    def sqlFiles(sub: String): Seq[(String, Path)] = sqlOf(walkFiles(root.resolve(sub)))
+    // models/ is walked once; each file kind below takes its suffix
+    val modelPaths = walkFiles(root.resolve("models"))
+    def modelFiles(suffix: String): Seq[Path] =
+      modelPaths.filter(_.toString.endsWith(suffix)).sortBy(_.toString)
 
     // model contracts: `models/<model>.contract.conf` — `col: type [constraint...]`
     // (reference: components.py:73-108, v1/model.py:55-62; constraints
     // become schema-declared generic tests, SURVEY §1.2)
-    val contractFiles = {
-      val d = root.resolve("models")
-      if (!Files.isDirectory(d)) Nil
-      else Files.walk(d).iterator().asScala
-        .filter(_.toString.endsWith(".contract.conf")).toSeq.sortBy(_.toString)
-    }
+    val contractFiles = modelFiles(".contract.conf")
     val contracts: Map[String, (Seq[(String, String)], Seq[Node])] =
       contractFiles.map { p =>
         val model = stem(p).stripSuffix(".contract")
@@ -97,7 +92,7 @@ object Project {
         model -> (cols, constraintTests)
       }.toMap
 
-    val models = sqlFiles("models").map { case (name, p) =>
+    val models = sqlOf(modelPaths).map { case (name, p) =>
       val node = TemplateResolver.parseModel(conf.name, name, Files.readString(p))
       val withContract = contracts.get(name) match {
         case Some((cols, _)) => node.copy(config = node.config.copy(
@@ -123,12 +118,7 @@ object Project {
     //     view cannot persist a compiled SELECT for fresh sessions, so
     //     the persistent default is what a DAG consumer expects)
     //   incremental_strategy / unique_key / tags / meta.<k>: as config()
-    val nativeFiles = {
-      val d = root.resolve("models")
-      if (!Files.isDirectory(d)) Nil
-      else Files.walk(d).iterator().asScala
-        .filter(_.toString.endsWith(".native.conf")).toSeq.sortBy(_.toString)
-    }
+    val nativeFiles = modelFiles(".native.conf")
     val nativeModels = nativeFiles.map { p =>
       val name = stem(p).stripSuffix(".native")
       val content = Files.readString(p)
@@ -261,12 +251,7 @@ object Project {
     // schema-declared per-column generic tests: `models/<model>.tests.conf`
     // (reference: schema.yml column tests, core/dbt/parser/
     // schema_generic_tests.py:45, generic_test_builders.py:69-303)
-    val columnTestFiles = {
-      val d = root.resolve("models")
-      if (!Files.isDirectory(d)) Nil
-      else Files.walk(d).iterator().asScala
-        .filter(_.toString.endsWith(".tests.conf")).toSeq.sortBy(_.toString)
-    }
+    val columnTestFiles = modelFiles(".tests.conf")
     val columnTests = columnTestFiles.flatMap { p =>
       val model = stem(p).stripSuffix(".tests")
       Files.readAllLines(p).asScala
@@ -278,12 +263,7 @@ object Project {
     // core/dbt/parser/unit_tests.py:246, unit_test_definition.py:26-70) —
     // section format: `test <name>` / `given <ref>` + CSV rows / `expect`
     // + CSV rows. Unit nodes BLOCK their model (run-before ordering).
-    val unitFiles = {
-      val d = root.resolve("models")
-      if (!Files.isDirectory(d)) Nil
-      else Files.walk(d).iterator().asScala
-        .filter(_.toString.endsWith(".unit.conf")).toSeq.sortBy(_.toString)
-    }
+    val unitFiles = modelFiles(".unit.conf")
     val unitParsed: Seq[(String, Node)] = unitFiles.flatMap { p =>
       val model = stem(p).stripSuffix(".unit")
       parseUnitFile(conf.name, Files.readAllLines(p).asScala.toSeq,
@@ -295,44 +275,30 @@ object Project {
       case None     => n
     })
 
-    val seedsDir = root.resolve("seeds")
-    val seeds =
-      if (!Files.isDirectory(seedsDir)) Nil
-      else Files.list(seedsDir).iterator().asScala
-        .filter(_.toString.endsWith(".csv")).toSeq.sortBy(_.toString)
-        .map { p =>
-          Node(NodeType.Seed, conf.name, stem(p),
-            code = Some(CsvCode(Files.readString(p))),
-            config = NodeConfig(materialized = "seed"),
-            path = Some(root.relativize(p).toString),
-            checksum = md5(Files.readString(p)))
-        }
+    val seeds = listFiles(root.resolve("seeds"), ".csv").map { p =>
+      Node(NodeType.Seed, conf.name, stem(p),
+        code = Some(CsvCode(Files.readString(p))),
+        config = NodeConfig(materialized = "seed"),
+        path = Some(root.relativize(p).toString),
+        checksum = md5(Files.readString(p)))
+    }
 
     // declared source tables become first-class manifest nodes so lineage
     // (parent_map), `source:` selection, and freshness see them
     // (reference: core/dbt/parser/sources.py SourceDefinition)
     val sourceNodes = conf.sources.toSeq.sortBy(_._1).flatMap { case (srcName, dir) =>
-      val d = Paths.get(dir)
-      if (!Files.isDirectory(d)) Nil
-      else Files.list(d).iterator().asScala
-        .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-        .map { p =>
-          Node(NodeType.Source, "sources", s"${srcName}_${stem(p)}",
-            sources = Seq((srcName, stem(p))),
-            path = Some(p.toString))
-        }
+      listFiles(Paths.get(dir), ".parquet").map { p =>
+        Node(NodeType.Source, "sources", s"${srcName}_${stem(p)}",
+          sources = Seq((srcName, stem(p))),
+          path = Some(p.toString))
+      }
     }
 
     // declared semantic models + saved queries (reference: semantic_model
     // /metric declarations v1/semantic_model.py:111-201, metric.py:14-111;
     // SavedQuery/Export v1/saved_query.py:34-96). Colon-separated lines;
     // expressions are Spark SQL fragments evaluated by the metric compiler.
-    def confFiles(sub: String): Seq[Path] = {
-      val d = root.resolve(sub)
-      if (!Files.isDirectory(d)) Nil
-      else Files.list(d).iterator().asScala
-        .filter(_.toString.endsWith(".conf")).toSeq.sortBy(_.toString)
-    }
+    def confFiles(sub: String): Seq[Path] = listFiles(root.resolve(sub), ".conf")
     val semanticNodes = confFiles("semantics").map { p =>
       val meta = collection.mutable.LinkedHashMap.empty[String, String]
       Files.readAllLines(p).asScala.map(_.trim)
@@ -474,25 +440,42 @@ object Project {
   }
 
   /** Register every `<dir>/<table>.parquet` as a `<source>_<table>` session
-    * view — the engine's source() resolution target. */
+    * view — the engine's source() resolution target. Runs no Spark job:
+    * a file's schema comes from its parquet footer ([[graft.Tables.readParquet]]). */
   def registerSources(spark: org.apache.spark.sql.SparkSession, conf: Config): Unit = {
     // tolerate nanosecond-timestamp parquet (read as raw long; models cast)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     conf.sources.foreach { case (srcName, dir) =>
-      val d = Paths.get(dir)
-      if (Files.isDirectory(d))
-        Files.list(d).iterator().asScala
-          .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-          .foreach { p =>
-            try spark.read.parquet(p.toString)
-              .createOrReplaceTempView(s"${srcName}_${stem(p)}")
-            catch {
-              case e: Throwable => System.err.println(
-                s"[graft] skipping source $srcName.${stem(p)}: ${e.getMessage}")
-            }
-          }
+      listFiles(Paths.get(dir), ".parquet").foreach { p =>
+        try graft.Tables.readParquet(spark, p.toString)
+          .createOrReplaceTempView(s"${srcName}_${stem(p)}")
+        catch {
+          case e: Throwable => System.err.println(
+            s"[graft] skipping source $srcName.${stem(p)}: ${e.getMessage}")
+        }
+      }
     }
   }
+
+  /** The entries directly in `dir` whose name ends with `suffix`, sorted
+    * (none when `dir` is not a directory). The stream is closed: an
+    * unclosed `Files.list` holds its directory fd until the JVM exits. */
+  private def listFiles(dir: Path, suffix: String): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.filter(_.toString.endsWith(suffix)).toSeq.sortBy(_.toString)
+      finally s.close()
+    }
+
+  /** Every path under `dir`, in walk order (none when `dir` is not a
+    * directory); the walk's stream is closed. */
+  private def walkFiles(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val s = Files.walk(dir)
+      try s.iterator().asScala.toSeq finally s.close()
+    }
 
   /** One declared column test: `<column>: <test_name> [key=value ...]`,
     * values optionally quoted. Config keys (severity/where/limit/warn_if/

@@ -17,7 +17,10 @@ final case class RunResult(
     status: String, // success | fail | warn | error | skipped
     startedAt: Instant,
     completedAt: Instant,
-    message: String = "") {
+    message: String = "",
+    // the thread that produced the result: the Runner's worker for a node
+    // it ran (run_results.json thread_id)
+    threadId: String = Thread.currentThread().getName) {
   def executionSeconds: Double =
     (completedAt.toEpochMilli - startedAt.toEpochMilli) / 1000.0
 }
@@ -74,12 +77,12 @@ final class Runner(
     identifier = n.config.alias.getOrElse(n.name),
     relType = if (n.config.materialized == "view") "view" else "table")
 
-  private def sqlNameFor(n: Node): String = relationFor(n).viewName
-
-  /** Resolve a non-ephemeral dependency to a queryable SQL name: the local
-    * warehouse if built, else the defer (state) warehouse. Registers the
-    * deferred relation as a session view on first use. */
-  private def resolveRelationName(dep: Node): String = {
+  /** Make a non-ephemeral dependency's view name queryable before SQL
+    * reads it: unless the session already has the view, register the
+    * local warehouse's relation if built, else the defer (state)
+    * warehouse's. Returns the view name. Execution-time only — compiling
+    * renders the name without touching the catalog or the warehouse. */
+  private def registerRelation(dep: Node): String = {
     val rel = relationFor(dep)
     val name = rel.viewName
     if (!spark.catalog.tableExists(name)) {
@@ -159,10 +162,22 @@ final class Runner(
 
   /** Compile a SQL node: render refs/sources and recursively inline
     * ephemeral deps as CTEs (reference: Compiler._recursively_prepend_ctes
-    * core/dbt/compilation.py:493-587, inject_ctes_into_sql :761-829). */
+    * core/dbt/compilation.py:493-587, inject_ctes_into_sql :761-829).
+    * Refs and {{ this }} render as relation view names, like the
+    * reference's compile-time RelationProxy: no Spark catalog lookup, no
+    * warehouse read, no side effect. */
   def compileSql(node: Node, isIncremental: Boolean = false,
-                 batchWindow: Option[(Instant, Instant)] = None): String = {
+                 batchWindow: Option[(Instant, Instant)] = None): String =
+    render(node, isIncremental, batchWindow)._1
+
+  /** [[compileSql]] plus the non-ephemeral nodes whose view names the SQL
+    * reads — its refs, those of the ephemeral CTEs it inlines, and each
+    * rendered body's {{ this }} — for [[buildDf]] to register before
+    * Spark parses the SQL. */
+  private def render(node: Node, isIncremental: Boolean,
+                     batchWindow: Option[(Instant, Instant)]): (String, Seq[Node]) = {
     val cteNames = collection.mutable.LinkedHashMap.empty[String, String]
+    val reads = collection.mutable.LinkedHashSet.empty[Node]
     def resolveRef(name: String): String = {
       val dep = manifest.byName(name).getOrElse(
         throw new NoSuchElementException(s"unknown ref '$name'"))
@@ -186,34 +201,41 @@ final class Runner(
         // wrap as a table ref (sample AND batch) — the inlined CTE is
         // this model's input exactly like a relation
         windowWrap(cte, dep, batchWindow)
-      } else applySample(dep, resolveRelationName(dep), batchWindow)
+      } else {
+        reads += dep
+        applySample(dep, relationFor(dep).viewName, batchWindow)
+      }
     }
-    def renderBody(sql: String, n: Node, isIncremental: Boolean): String =
+    def renderBody(sql: String, n: Node, isIncremental: Boolean): String = {
+      // {{ this }} must also be registered in a fresh session over an
+      // existing warehouse (the incremental re-run path)
+      if (!n.isEphemeral) reads += n
       TemplateResolver.render(sql, TemplateResolver.Context(
         resolveRef = resolveRef,
         // sources registered as <source>_<table> views
         resolveSource = (s, t) => emptyWrap(s"${s}_$t"),
-        // {{ this }} must also self-register in a fresh session over an
-        // existing warehouse (the incremental re-run path)
-        thisRelation = resolveRelationName(n),
+        thisRelation = relationFor(n).viewName,
         vars = vars,
         isIncremental = isIncremental))
+    }
     val body = node.code match {
       case Some(SqlCode(sql)) => renderBody(sql, node, isIncremental)
       case _ => throw new IllegalStateException(s"${node.name} is not a SQL node")
     }
-    if (cteNames.isEmpty) body
-    else {
-      val ctes = cteNames.map { case (n, s) => s"$n as (\n$s\n)" }.mkString(",\n")
-      // If the body already opens with its own WITH clause, splice the
-      // ephemeral CTEs into it instead of emitting a second WITH keyword
-      // (reference: inject_ctes_into_sql core/dbt/compilation.py:761-829).
-      val LeadingWith = """(?is)^\s*with\b(.*)""".r
-      body match {
-        case LeadingWith(rest) => s"with $ctes,$rest"
-        case _                 => s"with $ctes\n$body"
+    val sql =
+      if (cteNames.isEmpty) body
+      else {
+        val ctes = cteNames.map { case (n, s) => s"$n as (\n$s\n)" }.mkString(",\n")
+        // If the body already opens with its own WITH clause, splice the
+        // ephemeral CTEs into it instead of emitting a second WITH keyword
+        // (reference: inject_ctes_into_sql core/dbt/compilation.py:761-829).
+        val LeadingWith = """(?is)^\s*with\b(.*)""".r
+        body match {
+          case LeadingWith(rest) => s"with $ctes,$rest"
+          case _                 => s"with $ctes\n$body"
+        }
       }
-    }
+    (sql, reads.toSeq)
   }
 
   /** Build (but don't execute) a node's DataFrame. `batchWindow` is the
@@ -224,7 +246,10 @@ final class Runner(
     * predicate reaches the dep's scan. */
   def buildDf(node: Node, isIncremental: Boolean = false,
               batchWindow: Option[(Instant, Instant)] = None): DataFrame = node.code match {
-    case Some(SqlCode(_)) => spark.sql(compileSql(node, isIncremental, batchWindow))
+    case Some(SqlCode(_)) =>
+      val (sql, reads) = render(node, isIncremental, batchWindow)
+      reads.foreach(registerRelation)
+      spark.sql(sql)
     case Some(NativeCode(fn)) =>
       def windowFilter(df: DataFrame, et: Option[String]): DataFrame = {
         import org.apache.spark.sql.functions.{col, lit}
@@ -269,7 +294,7 @@ final class Runner(
                   throw new IllegalStateException(
                     s"source node ${d.uniqueId} missing its (source, table)"))
                 spark.table(s"${s0}_$t0")
-              case _ => spark.table(resolveRelationName(d))
+              case _ => spark.table(registerRelation(d))
             }
             windowFilter(base, d.config.eventTime)
           }
@@ -389,13 +414,13 @@ final class Runner(
     TemplateResolver.render(sql, TemplateResolver.Context(
       resolveRef = name => applySample(
         manifest.byName(name).getOrElse(throw new NoSuchElementException(s"unknown ref '$name'")),
-        resolveRelationName(manifest.byName(name).get)),
+        registerRelation(manifest.byName(name).get)),
       resolveSource = (s, t) => s"${s}_$t",
       thisRelation = {
         val rel = relationFor(node)
         if (rm.currentState(rel).isDefined)
           s"${rm.catalogName}.`${rel.schema}`.`${rel.identifier}`"
-        else resolveRelationName(node)
+        else registerRelation(node)
       },
       vars = vars))
 
@@ -437,7 +462,7 @@ final class Runner(
     val rel = relationFor(dep)
     if (rm.currentState(rel).isDefined)
       s"${rm.catalogName}.`${rel.schema}`.`${rel.identifier}`"
-    else resolveRelationName(dep)
+    else registerRelation(dep)
   }
 
   /** Execute a SCHEDULED operation node (r17): `;;`-separated statements
@@ -867,7 +892,7 @@ final class Runner(
               import org.apache.spark.sql.functions.expr
               val tested = manifest(node.testedNode.getOrElse(
                 throw new IllegalStateException(s"${node.name}: tested node unresolved")))
-              val input0 = spark.table(resolveRelationName(tested))
+              val input0 = spark.table(registerRelation(tested))
               val input = node.config.where.map(w => input0.filter(expr(w))).getOrElse(input0)
               val args = node.config.meta.collect {
                 case (k, v) if k.startsWith("arg.") => k.stripPrefix("arg.") -> v
@@ -880,7 +905,7 @@ final class Runner(
                     throw new IllegalArgumentException(s"${node.name}: relationships needs to=")))
                     .getOrElse(throw new NoSuchElementException(s"${node.name}: unknown parent"))
                   GenericTests.relationships(input, column,
-                    spark.table(resolveRelationName(parent)), args.getOrElse("field", column))
+                    spark.table(registerRelation(parent)), args.getOrElse("field", column))
                 case "unique_combination" =>
                   GenericTests.uniqueCombination(input, column.split("\\|").toSeq)
                 case name =>
@@ -957,7 +982,7 @@ final class Runner(
           val m = sem.config.meta
           val baseNode = manifest.byName(m("model")).getOrElse(
             throw new NoSuchElementException(s"${sem.name}: unknown model '${m("model")}'"))
-          val base = spark.table(resolveRelationName(baseNode))
+          val base = spark.table(registerRelation(baseNode))
           def agg(s: String): Metrics.Agg = s match {
             case "sum" => Metrics.Sum; case "min" => Metrics.Min
             case "max" => Metrics.Max; case "count" => Metrics.Count
@@ -1160,11 +1185,17 @@ final class Runner(
     * external dbt tooling; retry keeps reading unique_id/status. */
   def writeRunResults(results: Seq[RunResult], path: String): Unit = {
     def q(s: String) = Json.quote(s)
+    // the run's wall span, first start to last completion: concurrent
+    // nodes overlap, so their times do not add up to it
+    val elapsed =
+      if (results.isEmpty) 0.0
+      else (results.map(_.completedAt.toEpochMilli).max -
+        results.map(_.startedAt.toEpochMilli).min) / 1000.0
     val rows = results.map { r =>
       s"""{"unique_id":${q(r.uniqueId)},"status":${q(r.status)},""" +
         s""""timing":[{"name":"execute","started_at":${q(r.startedAt.toString)},""" +
         s""""completed_at":${q(r.completedAt.toString)}}],""" +
-        s""""thread_id":"main","execution_time":${r.executionSeconds},""" +
+        s""""thread_id":${q(r.threadId)},"execution_time":${r.executionSeconds},""" +
         s""""adapter_response":{},"message":${q(r.message)},"failures":null,""" +
         s""""compiled":null,"compiled_code":null,"relation_name":null}"""
     }
@@ -1172,7 +1203,7 @@ final class Runner(
       s"""{"metadata":{"dbt_schema_version":"https://schemas.getdbt.com/dbt/run-results/v6.json",""" +
         s""""generated_at":${q(Instant.now().toString)}},""" +
         s""""results":[${rows.mkString(",")}],""" +
-        s""""elapsed_time":${results.map(_.executionSeconds).sum},"args":{}}"""
+        s""""elapsed_time":$elapsed,"args":{}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json)
   }
 }

@@ -108,6 +108,31 @@ class MainSpec extends AnyFunSuite {
     assert(inline.trim == "3", inline)
   }
 
+  test("compile and ls run no Spark job and leave an absent warehouse absent") {
+    val example = "examples/tpch_pipeline"
+    val dir = graft.queries.OpsQueries.stageProject(example,
+      Project.load(example).config.sources("tpch"))
+    val wh = Files.createTempDirectory("graft_wh_parent").resolve("absent")
+    def run(cmd: String): String = {
+      val sw = new java.io.StringWriter()
+      val code = Main.execute(spark,
+        Main.Args(command = cmd, project = dir, warehouse = Some(wh.toString)),
+        new java.io.PrintWriter(sw, true))
+      assert(code == 0, sw.toString)
+      sw.toString
+    }
+    val compiled = ConstructionJobProbe.assertNoConstructionJobs(spark, "graft compile")(run("compile"))
+    val listed = ConstructionJobProbe.assertNoConstructionJobs(spark, "graft ls")(run("ls"))
+    assert(!Files.exists(wh), s"compile/ls created the warehouse root $wh")
+    assert(compiled.contains("-- model.tpch.pricing_summary") &&
+      compiled.contains("from main__stg_lineitem"), compiled)
+    assert(listed.contains("model.tpch.pricing_summary"), listed)
+    // the names compile renders are the relations a build then registers
+    run("build")
+    assert(Files.isDirectory(wh))
+    assert(run("compile") == compiled)
+  }
+
   test("schema-declared column tests: registry dispatch, input-where, warn severity, store_failures") {
     val dir = writeProject()
     val sw = new java.io.StringWriter()

@@ -68,6 +68,31 @@ class RunnerSpec extends AnyFunSuite {
     assert(Files.readString(rr).contains("\"unique_id\""))
   }
 
+  test("run_results.json: elapsed_time is the run's wall span and thread_id the worker's name") {
+    val rm = newRm()
+    val nodes = (1 to 6).map(i => TemplateResolver.parseModel("pkg", s"m$i",
+      s"{{ config(materialized='table') }}\nselect id, id * $i as v from range(20000)"))
+    val runner = new Runner(spark, rm, Manifest(nodes).processRefs(), threads = 4)
+    val results = runner.run()
+    assert(results.size == 6 && results.forall(_.status == "success"), results.mkString("\n"))
+    val rr = Files.createTempFile("run_results", ".json")
+    runner.writeRunResults(results, rr.toString)
+    val doc = Json.obj(Json.parse(Files.readString(rr)))
+    def num(v: Any): Double = v match {
+      case l: Long   => l.toDouble
+      case d: Double => d
+    }
+    val rows = Json.arr(doc("results")).map(Json.obj)
+    val times = rows.map(r => num(r("execution_time")))
+    val elapsed = num(doc("elapsed_time"))
+    // four workers overlap six independent nodes: the wall span is at
+    // least the longest node and less than the nodes' summed time
+    assert(elapsed >= times.max && elapsed < times.sum, s"elapsed $elapsed, node times $times")
+    val threads = rows.map(r => Json.str(r("thread_id")))
+    assert(!threads.contains("main") && threads.forall(_.nonEmpty), threads)
+    assert(threads.toSet == results.map(_.threadId).toSet)
+  }
+
   test("failing error-severity test skips downstream, warn does not") {
     val rm = newRm()
     val nodes = Seq(
