@@ -185,7 +185,7 @@ object Bench {
     // must drain before each read — task-end events deliver async
     val cpuListener = new org.apache.spark.graft.CpuTimeAccumulator
     spark.sparkContext.addSparkListener(cpuListener)
-    def cpuNow(): Long = cpuListener.snapshot(spark.sparkContext)._1
+    def cpuNow(): Long = cpuListener.snapshot(spark.sparkContext)
 
     // Warm-up pass: executes every headline plan once so JIT + whole-stage
     // codegen class compilation + parquet footer caches are attributed to

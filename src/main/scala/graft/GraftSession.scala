@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a graft SparkSession is configured. Every main (Bench,
-  * Verify, Main, SparkEntry, OptLab, ScaleProbe) and the test suite build
-  * their session here, so the config the oracle verifies is the config
-  * the bench times. GraftSessionSpec pins the SQL conf below.
+  * Verify, Main, SparkEntry, and the test tree's PlanDump) and the test
+  * suite build their session here, so the config the oracle verifies is
+  * the config the bench times. GraftSessionSpec pins the SQL conf below.
   *
   * Deployment inputs, each read only here:
   *   - `SPARK_GRAFT_CPUS`: local cores and shuffle partitions

@@ -98,7 +98,13 @@ final case class NodeConfig(
     warnIf: String = "!= 0",
     errorIf: String = "!= 0",
     failCalc: String = "count(*)",
-    storeFailures: Boolean = false)
+    storeFailures: Boolean = false) {
+
+  /** A seed's declared column casts, from `column_types.<column>` meta keys. */
+  def columnTypes: Map[String, String] = meta.collect {
+    case (k, v) if k.startsWith("column_types.") => k.stripPrefix("column_types.") -> v
+  }
+}
 
 /** Model code: either SQL with {{ ref() }}/{{ source() }} templating, or a
   * native Scala dataflow over already-resolved dependency DataFrames. The

@@ -29,16 +29,17 @@ object Materializations {
     * §default__load_csv_rows; agate load core/dbt/context/providers.py:1082).
     * Spark-native: one distributed csv read, no 10k-row insert batches. */
   def seed(rm: RelationManager, rel: Relation, csv: String,
-           columnTypes: Map[String, String] = Map.empty): Unit = {
-    val spark = rm.spark
+           columnTypes: Map[String, String] = Map.empty): Unit =
+    rm.writeTable(seedFrame(rm.spark, csv, columnTypes), rel)
+
+  /** A seed's CSV as a typed frame: header row, inferred types, then the
+    * declared `columnTypes` casts. */
+  def seedFrame(spark: SparkSession, csv: String,
+                columnTypes: Map[String, String]): DataFrame = {
     import spark.implicits._
-    val ds = spark.createDataset(csv.trim.split("\n").toSeq)
-    var reader = spark.read.option("header", "true").option("inferSchema", "true")
-    val df = reader.csv(ds)
-    val typed = columnTypes.foldLeft(df) { case (acc, (c, t)) =>
-      acc.withColumn(c, col(c).cast(t))
-    }
-    rm.writeTable(typed, rel)
+    val df = spark.read.option("header", "true").option("inferSchema", "true")
+      .csv(spark.createDataset(csv.trim.split("\n").toSeq))
+    columnTypes.foldLeft(df) { case (acc, (c, t)) => acc.withColumn(c, col(c).cast(t)) }
   }
 
   // ---------------------------------------------------------------- incremental

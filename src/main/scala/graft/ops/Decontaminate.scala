@@ -149,7 +149,7 @@ object Decontaminate {
     * excision itself is one fused codegen pass (ExciseWindows, r10).
     * The training side still never shuffles for the PROBE, only for the
     * doc-keyed start aggregation. The original token-level anti-join
-    * rebuild is retained below as the parity/oracle form. */
+    * rebuild is the parity/oracle form (ParityReferences, test tree). */
   def exciseOverlap(train: DataFrame, bench: DataFrame, idCol: String,
                     textCol: String, n: Int,
                     broadcastBench: Boolean = true): DataFrame =
@@ -159,9 +159,9 @@ object Decontaminate {
   /** Training-doc window starts whose n-gram matches a benchmark shingle —
     * shared by the fused and relational forms. Window starts are 0-BASED
     * (posexplode); window s covers token positions [s, s+n-1]. */
-  private def overlapStarts(train: DataFrame, bench: DataFrame, idCol: String,
-                            textCol: String, n: Int,
-                            broadcastBench: Boolean): DataFrame = {
+  private[graft] def overlapStarts(train: DataFrame, bench: DataFrame, idCol: String,
+                                   textCol: String, n: Int,
+                                   broadcastBench: Boolean): DataFrame = {
     val benchShingles = bench.select(explode(
       org.apache.spark.sql.graft.VectorExpressions
         .wordShingles(col(textCol), n, distinct = true)).as("shingle"))
@@ -202,31 +202,5 @@ object Decontaminate {
     train.select(col(idCol)).join(scored, Seq(idCol), "left")
       .withColumn("semantic_clean",
         coalesce(col("max_eval_cosine") < threshold, lit(true)))
-  }
-
-  /** Token-level anti-join rebuild — the independent reference the fused
-    * ExciseWindows pass is parity-tested against (ExciseParity in
-    * CurationOpsSpec); the DuckDB oracle mirrors this shape. */
-  private[graft] def exciseOverlapRelational(train: DataFrame, bench: DataFrame,
-                                             idCol: String, textCol: String, n: Int,
-                                             broadcastBench: Boolean = true): DataFrame = {
-    val covered = overlapStarts(train, bench, idCol, textCol, n, broadcastBench)
-      .select(col(idCol), explode(sequence(col("s"), col("s") + (n - 1))).as("pos"))
-      .distinct()
-    val toks = train.select(col(idCol),
-      posexplode(TextAnalysis.tokens(col(textCol))).as(Seq("pos", "tok")))
-    val rebuilt = toks.join(covered, Seq(idCol, "pos"), "left_anti")
-      .groupBy(col(idCol))
-      .agg(
-        array_join(transform(sort_array(collect_list(struct(col("pos"), col("tok")))),
-          s => s.getField("tok")), " ").as("clean_text"),
-        count(lit(1)).as("n_kept"))
-    train.select(col(idCol), size(TextAnalysis.tokens(col(textCol)))
-        .cast(LongType).as("n_tokens"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        col("n_tokens"),
-        (col("n_tokens") - coalesce(col("n_kept"), lit(0L))).as("n_removed"))
   }
 }

@@ -195,39 +195,6 @@ object Dedup {
             .minhashSignature(col(textCol), shingleLen, k),
           array((0 until k).map(_ => lit(MinhashPrime)): _*)).as("sig"))
 
-  /** The original relational formulation (explode → k-min aggregate →
-    * join): kept as the independent reference implementation the fused
-    * expression is parity-tested against. */
-  private[graft] def minhashSignaturesRelational(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int, k: Int): DataFrame = {
-    // Fully codegen shingling: explode the position range, then
-    // md5(substr) as a plain projection — no higher-order lambdas on the
-    // hot path. Duplicate shingle hashes are harmless here because min()
-    // over a multiset equals min() over its set, so no distinct needed.
-    // Explicit partition count: small-file inputs arrive as one partition
-    // and AQE would coalesce a size-based repartition right back.
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val docs = df.repartition(par, col(idCol))
-      .select(col(idCol).as("doc"), col(textCol).as("__text"))
-    val shingleRows = docs
-      // texts shorter than a shingle contribute nothing (and Spark's
-      // sequence(1, 0) is [1, 0], not empty — must pre-filter)
-      .filter(length(col("__text")) >= shingleLen)
-      .select(col("doc"), col("__text"),
-        explode(sequence(lit(1), length(col("__text")) - (shingleLen - 1))).as("i"))
-      .select(col("doc"),
-        conv(substring(md5(col("__text").substr(col("i"), lit(shingleLen))), 1, 7), 16, 10)
-          .cast(LongType).as("h"))
-    val aggs = (0 until k).map(i =>
-      min((lit(minhashCoefA(i)) * col("h") + lit(minhashCoefB(i))) % MinhashPrime).as(s"__m_$i"))
-    val agg = shingleRows.groupBy("doc").agg(aggs.head, aggs.tail: _*)
-    // shingle-less docs keep the sentinel signature (oracle's len=0 CASE)
-    docs.select(col("doc")).join(agg, Seq("doc"), "left")
-      .select(col("doc"), array((0 until k).map(i =>
-        coalesce(col(s"__m_$i"), lit(MinhashPrime))): _*).as("sig"))
-  }
-
   /** LSH band keys: signature split into `bands` rows of `rowsPerBand`,
     * each band hashed to one bucket key. The key is a 64-bit xxhash (8
     * bytes on the wire), not an md5 hex string (32 bytes + string
@@ -1039,58 +1006,14 @@ object Dedup {
     * [[org.apache.spark.sql.graft.SimhashSignature]] expression — one
     * pass per document (tokenize, distinct, md5, per-bit majority), no
     * explode/aggregate/join. SimhashParitySpec pins bit-equality against
-    * the retained relational form below (and therefore the unchanged
-    * DuckDB oracle). */
+    * the relational form (ParityReferences, test tree; and therefore
+    * the unchanged DuckDB oracle). */
   def simhashes(df: DataFrame, idCol: String, textCol: String): DataFrame =
     ensureParallelism(df, idCol)
       .select(col(idCol).as("doc"),
         coalesce(
           org.apache.spark.sql.graft.VectorExpressions.simhashSignature(col(textCol)),
           lit(0L)).as("sh"))
-
-  /** The original relational SimHash (explode distinct tokens → one
-    * hash-aggregate of the 60 per-bit majorities → fold): kept as the
-    * independent reference implementation for the parity spec.
-    *
-    * The 60 per-bit counts are packed into 21-bit lanes, 3 per long, so
-    * the aggregate carries 20 sum buffers instead of 60: each token
-    * contributes `((h>>b)&1) << 21*lane` per group, and the per-bit count
-    * unpacks as `(sum >> 21*lane) & 0x1FFFFF` — exact as long as a doc
-    * has fewer than 2^21 distinct tokens (documented bound; the per-doc
-    * distinct-token count of any real corpus is orders of magnitude
-    * lower). Output is bit-identical to the unpacked form. */
-  private[graft] def simhashesRelational(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val docs = df.repartition(par, col(idCol))
-      .select(col(idCol).as("doc"), col(textCol).as("__text"))
-    val tokRows = docs.select(col("doc"),
-      explode(array_distinct(TextAnalysis.tokens(col("__text")))).as("t"))
-      .withColumn("h",
-        conv(substring(md5(col("t")), 1, SimhashBits / 4), 16, 10).cast(LongType))
-    val LaneBits = 21
-    val groups: Seq[Seq[Int]] = (0 until SimhashBits).grouped(3).toSeq
-    def bitOf(b: Int): Column =
-      call_function("shiftright", col("h"), lit(b)).bitwiseAND(lit(1L))
-    val packed = groups.zipWithIndex.map { case (bs, g) =>
-      sum(bs.zipWithIndex.map { case (b, lane) =>
-        bitOf(b) * lit(1L << (LaneBits * lane))
-      }.reduce(_ + _)).as(s"__p_$g")
-    }
-    val agg = tokRows.groupBy("doc").agg(count(lit(1)).as("__n"), packed: _*)
-    def cnt(b: Int): Column = {
-      val g = b / 3; val lane = b % 3
-      call_function("shiftright", col(s"__p_$g"), lit(LaneBits * lane))
-        .bitwiseAND(lit((1L << LaneBits) - 1))
-    }
-    val sig = agg.select(col("doc"),
-      (0 until SimhashBits).map(b =>
-        when(cnt(b) * 2 > col("__n"), lit(1L << b)).otherwise(lit(0L)))
-        .reduce(_ + _).as("sh"))
-    // token-less docs fold to signature 0 (explode dropped them; the
-    // oracle's list_sum over an empty list is 0)
-    docs.select(col("doc")).join(sig, Seq("doc"), "left")
-      .select(col("doc"), coalesce(col("sh"), lit(0L)).as("sh"))
-  }
 
   /** SimHash near-dup pairs with ≤ maxHamming distance, blocked on
     * 4×15-bit blocks (pigeonhole guarantees recall for distance ≤ 3; the
@@ -1628,7 +1551,8 @@ object Dedup {
     * The rebuild collects LOSING window starts per doc (orders of
     * magnitude fewer rows than the token stream) and excises in one
     * fused codegen pass (ExciseWindows) — the original token-level
-    * anti-join rebuild is retained below as the parity/oracle form. */
+    * anti-join rebuild is the parity/oracle form (ParityReferences,
+    * test tree). */
   def substringExcise(df: DataFrame, idCol: String, textCol: String,
                       n: Int): DataFrame =
     exciseByStarts(df, idCol, textCol,
@@ -1660,8 +1584,8 @@ object Dedup {
   /** The (id, s) occurrences that LOSE their window's ownership contest —
     * shared by the fused and relational forms so both excise identical
     * position sets. */
-  private def substringLoserStarts(df: DataFrame, idCol: String,
-                                   textCol: String, n: Int): DataFrame = {
+  private[graft] def substringLoserStarts(df: DataFrame, idCol: String,
+                                          textCol: String, n: Int): DataFrame = {
     val windows = df.select(col(idCol), posexplode(
       org.apache.spark.sql.graft.VectorExpressions
         .wordShingles(col(textCol), n, distinct = false)).as(Seq("s", "shingle")))
@@ -1786,30 +1710,4 @@ object Dedup {
     store.join(deleted.select(col(deletedIdCol).as(ownerCol)).distinct(),
       Seq(ownerCol), "left_anti")
       .select(store.columns.map(col).toSeq: _*)
-
-  /** Token-level anti-join rebuild — the independent reference the fused
-    * ExciseWindows pass is parity-tested against (ExciseParity in
-    * CurationOpsSpec); the DuckDB oracle mirrors this shape. Not a hot
-    * path: it shuffles token-level rows twice for per-document work. */
-  private[graft] def substringExciseRelational(df: DataFrame, idCol: String,
-                                               textCol: String, n: Int): DataFrame = {
-    val covered = substringLoserStarts(df, idCol, textCol, n)
-      .select(col(idCol), explode(sequence(col("s"), col("s") + (n - 1))).as("pos"))
-      .distinct()
-    val toks = df.select(col(idCol),
-      posexplode(TextAnalysis.tokens(col(textCol))).as(Seq("pos", "tok")))
-    val rebuilt = toks.join(covered, Seq(idCol, "pos"), "left_anti")
-      .groupBy(col(idCol))
-      .agg(
-        array_join(transform(sort_array(collect_list(struct(col("pos"), col("tok")))),
-          s => s.getField("tok")), " ").as("clean_text"),
-        count(lit(1)).as("n_kept"))
-    df.select(col(idCol), size(TextAnalysis.tokens(col(textCol)))
-        .cast(LongType).as("n_tokens"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        col("n_tokens"),
-        (col("n_tokens") - coalesce(col("n_kept"), lit(0L))).as("n_removed"))
-  }
 }

@@ -46,31 +46,12 @@ object Dsir {
     * per-doc multiset equality pinned by DsirFeatureParity; downstream
     * sums round to 6 decimals, which absorbs the (already
     * partition-order-dependent) double-summation order. */
-  private def featureBuckets(df: DataFrame, idCol: String, textCol: String,
-                             nBuckets: Int): DataFrame =
-    featureBucketsFused(df, idCol, textCol, nBuckets)
-
   private[graft] def featureBucketsFused(df: DataFrame, idCol: String,
                                          textCol: String,
                                          nBuckets: Int): DataFrame =
     df.select(col(idCol).as("__id"),
       explode(org.apache.spark.sql.graft.VectorExpressions
         .dsirFeatureBuckets(col(textCol), nBuckets)).as("b"))
-
-  /** The original two-scan relational form — the independent reference
-    * implementation DsirFeatureParity pins [[featureBuckets]] against. */
-  private[graft] def featureBucketsRelational(df: DataFrame, idCol: String,
-                                              textCol: String,
-                                              nBuckets: Int): DataFrame = {
-    val toks = df.select(col(idCol).as("__id"),
-      explode(TextAnalysis.tokens(col(textCol))).as("f"))
-    val bigs = df.select(col(idCol).as("__id"),
-      explode(org.apache.spark.sql.graft.VectorExpressions
-        .wordShingles(col(textCol), 2, distinct = false)).as("f"))
-    toks.unionAll(bigs).select(col("__id"),
-      (conv(substring(md5(col("f")), 1, 7), 16, 10).cast(LongType)
-        % nBuckets).as("b"))
-  }
 
   /** The DSIR bucket model as a PERSISTED artifact: the COMPLETE
     * nBuckets-row table (b, lw, model_buckets) where
@@ -89,9 +70,9 @@ object Dsir {
   def buildModel(raw: DataFrame, target: DataFrame, idCol: String,
                  textCol: String, nBuckets: Int = 4096,
                  smoothing: Double = 1.0): DataFrame = {
-    val rawCounts = featureBuckets(raw, idCol, textCol, nBuckets)
+    val rawCounts = featureBucketsFused(raw, idCol, textCol, nBuckets)
       .groupBy("b").agg(count(lit(1)).as("cr"))
-    val targetCounts = featureBuckets(target, idCol, textCol, nBuckets)
+    val targetCounts = featureBucketsFused(target, idCol, textCol, nBuckets)
       .groupBy("b").agg(count(lit(1)).as("ct"))
     modelFromCounts(raw.sparkSession, rawCounts, targetCounts, nBuckets, smoothing)
   }
@@ -194,12 +175,12 @@ object Dsir {
           .crossJoin(broadcast(guard))
           .select(col("b"),
             when(col("__model_ok") === 1, col("lw")).as("lw"))
-        (featureBuckets(raw, idCol, textCol, nBuckets), validated, Some(guard))
+        (featureBucketsFused(raw, idCol, textCol, nBuckets), validated, Some(guard))
       case None =>
-        val feats = featureBuckets(raw, idCol, textCol, nBuckets)
+        val feats = featureBucketsFused(raw, idCol, textCol, nBuckets)
           .localCheckpoint(true)
         val rawCounts = feats.groupBy("b").agg(count(lit(1)).as("cr"))
-        val targetCounts = featureBuckets(target, idCol, textCol, nBuckets)
+        val targetCounts = featureBucketsFused(target, idCol, textCol, nBuckets)
           .groupBy("b").agg(count(lit(1)).as("ct"))
         (feats, modelFromCounts(raw.sparkSession, rawCounts, targetCounts,
           nBuckets, smoothing).select("b", "lw"), None)

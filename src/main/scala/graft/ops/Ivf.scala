@@ -23,8 +23,8 @@ object Ivf {
     * codegen call carrying the whole centroid matrix as a plan constant.
     *
     * This is the r9 scale fix for the quantizer's cell-count limit: the
-    * previous literal-composed argmax ([[cellRanksRelational]], retained
-    * below as the parity/oracle reference) generated k × dims scalar
+    * previous literal-composed argmax (cellRanksRelational, kept in the
+    * test tree as the parity/oracle reference) generated k × dims scalar
     * literals and stopped compiling usefully past a few hundred cells;
     * the fused form is O(1) plan size at any k, so SemDeDup's k ∝ √n and
     * multi-thousand-cell ANN configs work (see ScaleProbe ivf legs). */
@@ -32,31 +32,11 @@ object Ivf {
     graft.expressions.VectorExpressions.ivfCellRanks(
       v, centroids.map(_._1).toArray, centroids.map(_._2).toArray, nProbe)
 
-  /** The original relational assignment — an `array_sort` over per-cell
-    * cosine structs, each centroid spelled as `dims` literals. Kept as
-    * the executable specification: IvfParitySpec pins the fused form to
-    * it bit-for-bit, and the DuckDB oracles reproduce exactly this
-    * cross-join + rank shape in SQL. Do NOT use on a data path with
-    * large k — its expression tree grows as k × dims (the limit the
-    * fused form removes). */
-  private[graft] def cellRanksRelational(v: Column, centroids: Seq[(Int, Array[Double])],
-                                         nProbe: Int): Column = {
-    val scored = centroids.map { case (cid, cvec) =>
-      struct(
-        Similarity.cosine(v, array(cvec.map(lit): _*)).as("score"),
-        lit(-cid).as("neg_id")) // descending sort: highest score, then lowest id
-    }
-    // sort descending by (score, -id), take nProbe cell ids
-    transform(
-      slice(reverse(array_sort(array(scored: _*))), 1, nProbe),
-      s => -s.getField("neg_id"))
-  }
-
   /** Cell assignment as a standalone operator: each row gets the id of
     * its best cell (or its `nProbe` best cells when nProbe > 1, as an
-    * array) — the building block for cell-partitioned corpus layouts,
-    * SemDeDup blocking, and the ScaleProbe assignment legs. One narrow
-    * codegen projection; no join, no shuffle. */
+    * array) — the building block for cell-partitioned corpus layouts
+    * and SemDeDup blocking. One narrow codegen projection; no join, no
+    * shuffle. */
   def assignCells(df: DataFrame, idCol: String, vecCol: String,
                   centroids: Seq[(Int, Array[Double])], nProbe: Int = 1): DataFrame = {
     val ranks = cellRanks(Similarity.asDouble(col(vecCol)), centroids, nProbe)

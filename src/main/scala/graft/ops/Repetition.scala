@@ -192,39 +192,10 @@ object Repetition {
     fractions(stats, idCol)
   }
 
-  /** The original explode + two-level groupBy formulation — retained as
-    * the independent reference the fused expression is parity-tested
-    * against (RepetitionParity in CurationOpsSpec); the DuckDB oracle
-    * mirrors this shape. Do not use on a hot path: both gram families
-    * shuffle the whole corpus. */
-  private[graft] def ngramRepetitionRelational(df: DataFrame, idCol: String,
-                                               textCol: String): DataFrame = {
-    val base = df.select(col(idCol),
-      size(TextAnalysis.tokens(col(textCol))).cast(LongType).as("n_tokens"))
-
-    def gramStats(n: Int, topName: String, dupName: String): DataFrame =
-      df.select(col(idCol), explode(
-        org.apache.spark.sql.graft.VectorExpressions
-          .wordShingles(col(textCol), n, distinct = false)).as("g"))
-        .groupBy(col(idCol), col("g")).agg(count(lit(1)).as("c"))
-        .groupBy(col(idCol)).agg(
-          max("c").as(topName),
-          sum(when(col("c") > 1, col("c")).otherwise(lit(0L))).as(dupName))
-
-    val joined = base
-      .join(gramStats(2, "top2", "dup2"), Seq(idCol), "left")
-      .join(gramStats(3, "top3", "dup3"), Seq(idCol), "left")
-      .select(col(idCol), col("n_tokens"),
-        coalesce(col("top2"), lit(0L)).as("top2"),
-        coalesce(col("dup2"), lit(0L)).as("dup2"),
-        coalesce(col("top3"), lit(0L)).as("top3"))
-    fractions(joined, idCol)
-  }
-
   /** Shared fraction + verdict arithmetic over the raw counts
     * (n_tokens, top2, dup2, top3) — the single site both formulations
     * and the oracle's rounding contract flow through. */
-  private def fractions(counts: DataFrame, idCol: String): DataFrame = {
+  private[graft] def fractions(counts: DataFrame, idCol: String): DataFrame = {
     val nTok = col("n_tokens").cast(DoubleType)
     def frac(c: Column): Column = when(col("n_tokens") > 0, c).otherwise(lit(0.0))
     val topBi = round(frac(least(col("top2") * 2.0 / nTok, lit(1.0))), 6)

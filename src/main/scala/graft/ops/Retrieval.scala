@@ -71,18 +71,6 @@ object Retrieval {
       .select(col("__tc.term").as("term"), col("doc_id"),
         col("__tc.tf").as("tf"), col("dl"))
 
-  /** The original groupBy posting build — the independent reference
-    * implementation IndexBuildParity pins [[postingIndex]] against. */
-  private[graft] def postingIndexRelational(docs: DataFrame, idCol: String,
-                                            textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        TextAnalysis.tokens(col(textCol)).as("__toks"))
-      .select(col("doc_id"), size(col("__toks")).cast(LongType).as("dl"),
-        explode(col("__toks")).as("term"))
-      .groupBy("term", "doc_id", "dl") // dl is functionally determined by doc_id
-      .agg(count(lit(1)).as("tf"))
-      .select("term", "doc_id", "tf", "dl")
-
   /** Document-length rows `(doc_id, dl)` — the corpus-statistics
     * artifact behind N and avgdl. Kept SEPARATE from the postings so
     * the 1-row stats aggregate scans two thin columns, not the index;
@@ -287,25 +275,6 @@ object Retrieval {
           .termPositions(col("__toks"))).as("__tp"))
       .select(col("__tp.term").as("term"), col("doc_id"),
         col("__tp.positions").as("positions"), col("dl"))
-
-  /** The original groupBy positional build — the independent reference
-    * implementation IndexBuildParity pins [[positionalIndex]] against.
-    * (ZERO-SHUFFLE r19 rationale: same as [[postingIndex]] — the former
-    * posexplode → groupBy → sort_array(collect_list) paid a corpus-sized
-    * Exchange plus per-row array churn to reassemble position lists that
-    * were already contiguous in their source row; TermPositions emits
-    * each term's 1-based positions in token order, ascending and
-    * duplicate-free by construction — the exact sort_array layout
-    * [[phraseMatch]]'s two-pointer intersection requires.) */
-  private[graft] def positionalIndexRelational(docs: DataFrame, idCol: String,
-                                               textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        TextAnalysis.tokens(col(textCol)).as("__toks"))
-      .select(col("doc_id"), size(col("__toks")).cast(LongType).as("dl"),
-        posexplode(col("__toks")).as(Seq("__p0", "term")))
-      .groupBy("term", "doc_id", "dl")
-      .agg(sort_array(collect_list(col("__p0") + 1)).as("positions"))
-      .select("term", "doc_id", "positions", "dl")
 
   /** Exact-phrase matching from the positional index: a document
     * matches when some start position p has the phrase's i-th token at

@@ -1,46 +1,26 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Shared-scorer-frame severing (r18 opt; r19 — VERDICT r18 #9).
   *
   * Several ops feed ONE scored frame to BOTH a cutoff aggregate and the
   * verdict assignment; Spark dedupes no shared subplans, so without a
   * materialization the whole scoring lineage executes twice per action.
-  * The default severing is `localCheckpoint(eager = true)` — cheapest,
-  * but executor-local: on a real cluster an executor loss mid-query
-  * fails the job instead of recomputing (the blocks have no lineage).
-  * That trade is fine on `local[*]`; a cluster deployment sets
+  * Severing is `localCheckpoint(eager = true)` — cheapest, but
+  * executor-local: on a real cluster an executor loss mid-query fails
+  * the job instead of recomputing (the blocks have no lineage).
   *
-  *   spark.graft.sever.mode = persist
-  *
-  * to use `persist(MEMORY_AND_DISK)` instead — same
-  * compute-the-scorer-once effect, full lineage kept for fault
-  * recovery. The persist is materialized with one count() before
-  * returning: a persisted-but-unmaterialized frame composed into a
-  * bigger query makes Spark bypass OTHER caches in that query and
-  * recompute them wholesale (the r15 lesson behind
-  * Dedup.setIncrementalImpl's load-bearing count()).
-  *
-  * EAGER-EXECUTION NOTE (ADVICE r18): either mode runs the full scorer
-  * job at DataFrame-CONSTRUCTION time of the calling combinator
+  * EAGER-EXECUTION NOTE (ADVICE r18): severing runs the full scorer job
+  * at DataFrame-CONSTRUCTION time of the calling combinator
   * (Dsir.select, TextAnalysis.perplexityBuckets,
   * Sampling.topFractionByScore), and downstream filters no longer push
   * into the scorer lineage. Callers that only need the plan, or that
   * filter hard downstream, should score-then-filter explicitly instead.
-  * Streaming inputs pass through untouched (a micro-batch can neither
-  * checkpoint nor persist across triggers).
+  * Streaming inputs pass through untouched (a micro-batch cannot
+  * checkpoint across triggers).
   */
 object Sever {
-  def sever(df: DataFrame): DataFrame = {
-    if (df.isStreaming) return df
-    df.sparkSession.conf.getOption("spark.graft.sever.mode") match {
-      case Some("persist") =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        p.count() // materialize — see scaladoc (r15 unmaterialized-persist hazard)
-        p
-      case _ => df.localCheckpoint(true)
-    }
-  }
+  def sever(df: DataFrame): DataFrame =
+    if (df.isStreaming) df else df.localCheckpoint(true)
 }

@@ -316,6 +316,8 @@ final class Runner(
           deps + ("this" -> rm.read(relSelf))
         else deps
       fn(spark, withThis)
+    case Some(CsvCode(csv)) =>
+      Materializations.seedFrame(spark, csv, node.config.columnTypes)
     case None => throw new IllegalStateException(s"${node.name} has no code")
   }
 
@@ -698,10 +700,7 @@ final class Runner(
           val rel = relationFor(node)
           node.code match {
             case Some(CsvCode(csv)) =>
-              val columnTypes = node.config.meta.collect {
-                case (k, v) if k.startsWith("column_types.") => k.stripPrefix("column_types.") -> v
-              }
-              Materializations.seed(rm, rel, csv, columnTypes)
+              Materializations.seed(rm, rel, csv, node.config.columnTypes)
             case _ => throw new IllegalStateException(s"seed ${node.name} needs CSV code")
           }
           runHooks(node, node.config.postHooks)

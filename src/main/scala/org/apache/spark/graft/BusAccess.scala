@@ -14,31 +14,24 @@ object BusAccess {
     catch { case _: Exception => () }
 }
 
-/** Accumulates executor CPU nanoseconds and shuffle-write records across
-  * all task ends — the shared measurement axes for Bench and ScaleProbe.
-  * Wall time on the bench host swings ±20% with ambient load and CPU
-  * time itself inflates 2-3× under heavy SMT contention; shuffle-write
-  * records are the fully DETERMINISTIC structural axis (a plan shape
-  * either moves the rows or it doesn't), so A/B legs comparing plan
-  * shapes read it first. Read via [[snapshot]]: task-end events are
-  * delivered asynchronously. */
+/** Accumulates executor CPU nanoseconds across all task ends — Bench's
+  * per-query CPU axis. Wall time on the bench host swings ±20% with
+  * ambient load; CPU time resists that noise, though it still inflates
+  * 2-3× under heavy SMT contention. Read via [[snapshot]]: task-end
+  * events are delivered asynchronously. */
 class CpuTimeAccumulator extends org.apache.spark.scheduler.SparkListener {
   val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-  val shuffleRecords = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** (executor CPU ns, shuffle-write records) so far, read after `sc`'s
-    * listener bus has delivered every queued task end. */
-  def snapshot(sc: SparkContext): (Long, Long) = {
+  /** Executor CPU ns so far, read after `sc`'s listener bus has
+    * delivered every queued task end. */
+  def snapshot(sc: SparkContext): Long = {
     BusAccess.waitUntilListenerBusEmpty(sc)
-    (cpuNs.get(), shuffleRecords.get())
+    cpuNs.get()
   }
 
   override def onTaskEnd(
       taskEnd: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
     val m = taskEnd.taskMetrics
-    if (m != null) {
-      cpuNs.addAndGet(m.executorCpuTime)
-      shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-    }
+    if (m != null) cpuNs.addAndGet(m.executorCpuTime)
   }
 }

@@ -558,46 +558,63 @@ case class MinhashSignature(child: Expression, shingleLen: Int, k: Int)
     copy(child = newChild)
 }
 
-object MinhashSignature {
-  val Prime: Long = graft.ops.Dedup.MinhashPrime
-
-  /** Per-thread md5 state + a reusable 16-byte output buffer: the old
-    * per-shingle `md.digest()` allocated a fresh array per window —
-    * tens of millions of allocations per corpus-sized signature build
-    * (r18 optimization round). */
-  private final class Md5State {
+/** MD5 hex-prefix hashing shared by the minhash, simhash and DSIR
+  * kernels. One digest and one 16-byte output buffer per thread, so a
+  * call allocates nothing: an array per `digest()` call is tens of
+  * millions of allocations per corpus-sized signature build. */
+private object Md5Prefix {
+  private final class State {
     val md: java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
     val out = new Array[Byte](16)
-    // Direct-mapped EXACT shingle→hash cache (r18): character shingles
-    // are Zipf-distributed, so a small per-thread cache skips the md5
-    // for the overwhelmingly-common windows. Keys pack the window's
-    // UTF-8 bytes (≤ 7 bytes — the ASCII shingle case) plus the length
-    // into one long, so a hit is provably the same byte string; longer
-    // (multibyte) windows bypass the cache. 2^16 entries ≈ 0.75 MB per
-    // task thread; eviction is overwrite (a stale entry is simply
-    // recomputed next time). Values are the 28-bit md5-prefix hash —
-    // bit-identical to the uncached path by construction.
+  }
+  private val state = ThreadLocal.withInitial(
+    new java.util.function.Supplier[State] {
+      override def get(): State = new State
+    })
+
+  /** The first `nibbles` (≤ 15) hex digits of md5 over `len` bytes at
+    * `off`, as a non-negative long — identical to
+    * conv(substring(md5(s), 1, nibbles), 16, 10). */
+  def prefix(bytes: Array[Byte], off: Int, len: Int, nibbles: Int): Long = {
+    val s = state.get()
+    s.md.update(bytes, off, len)
+    s.md.digest(s.out, 0, 16) // also resets the digest
+    val d = s.out
+    var h = 0L
+    var i = 0
+    while (i < nibbles / 2) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
+    if ((nibbles & 1) == 1) h = (h << 4) | ((d(i) & 0xf0L) >>> 4)
+    h
+  }
+}
+
+object MinhashSignature {
+  val Prime: Long = graft.ops.Dedup.MinhashPrime
+
+  /** Direct-mapped EXACT shingle→hash cache (r18): character shingles
+    * are Zipf-distributed, so a small per-thread cache skips the md5
+    * for the overwhelmingly-common windows. Keys pack the window's
+    * UTF-8 bytes (≤ 7 bytes — the ASCII shingle case) plus the length
+    * into one long, so a hit is provably the same byte string; longer
+    * (multibyte) windows bypass the cache. 2^16 entries ≈ 0.75 MB per
+    * task thread; eviction is overwrite (a stale entry is simply
+    * recomputed next time). Values are the 28-bit md5-prefix hash —
+    * bit-identical to the uncached path by construction. */
+  private final class ShingleCache {
     val keys = new Array[Long](1 << 16)
     val vals = new Array[Int](1 << 16)
   }
 
-  private val state = ThreadLocal.withInitial(
-    new java.util.function.Supplier[Md5State] {
-      override def get(): Md5State = new Md5State
+  private val cache = ThreadLocal.withInitial(
+    new java.util.function.Supplier[ShingleCache] {
+      override def get(): ShingleCache = new ShingleCache
     })
 
   /** 28-bit md5-prefix hash of `len` bytes at `off` — identical to
     * conv(substring(md5(s), 1, 7), 16, 10). */
-  private def md5h28(s: Md5State, bytes: Array[Byte], off: Int, len: Int): Int = {
-    val md = s.md
-    md.reset()
-    md.update(bytes, off, len)
-    md.digest(s.out, 0, 16)
-    val d = s.out
-    (((d(0) & 0xff) << 20) | ((d(1) & 0xff) << 12) |
-      ((d(2) & 0xff) << 4) | ((d(3) & 0xf0) >>> 4))
-  }
+  private def md5h28(bytes: Array[Byte], off: Int, len: Int): Int =
+    Md5Prefix.prefix(bytes, off, len, 7).toInt
 
   /** Static helper shared by eval and codegen.
     *
@@ -635,8 +652,8 @@ object MinhashSignature {
     offsets(nChars) = nBytes
     val last = nChars - shingleLen
     if (last >= 0) {
-      val s = state.get()
-      val keys = s.keys; val vals = s.vals
+      val c = cache.get()
+      val keys = c.keys; val vals = c.vals
       var i = 0
       while (i <= last) {
         val off = offsets(i)
@@ -651,10 +668,10 @@ object MinhashSignature {
           val idx = ((key * -0x61c8864680b583ebL) >>> 48).toInt & 0xffff
           if (keys(idx) == key) h = vals(idx)
           else {
-            h = md5h28(s, bytes, off, len)
+            h = md5h28(bytes, off, len)
             keys(idx) = key; vals(idx) = h
           }
-        } else h = md5h28(s, bytes, off, len)
+        } else h = md5h28(bytes, off, len)
         // incremental affine chain over Dedup.minhashCoefA/B's uniform
         // steps — the single source of truth the relational reference
         // and the DuckDB oracle share
@@ -716,17 +733,10 @@ object SimhashSignature {
   private final class TokenCache {
     val keys = new Array[String](1 << 16)
     val vals = new Array[Long](1 << 16)
-    val out = new Array[Byte](16)
   }
   private val cache = ThreadLocal.withInitial(
     new java.util.function.Supplier[TokenCache] {
       override def get(): TokenCache = new TokenCache
-    })
-
-  private val digest = ThreadLocal.withInitial(
-    new java.util.function.Supplier[java.security.MessageDigest] {
-      override def get(): java.security.MessageDigest =
-        java.security.MessageDigest.getInstance("MD5")
     })
 
   def compute(text: org.apache.spark.unsafe.types.UTF8String): Long = {
@@ -735,7 +745,6 @@ object SimhashSignature {
     val seen = new java.util.HashSet[String]()
     val counts = new Array[Int](Bits)
     var n = 0
-    val md = digest.get()
     val c = cache.get()
     var i = 0
     while (i < toks.length) {
@@ -747,16 +756,10 @@ object SimhashSignature {
         val ck = c.keys(idx)
         if (ck != null && (ck.eq(t) || ck == t)) h = c.vals(idx)
         else {
-          md.reset()
-          md.update(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          md.digest(c.out, 0, 16)
-          val d = c.out
           // first 15 md5 hex nibbles as a 60-bit value — identical to
           // conv(substring(md5(t), 1, 15), 16, 10)
-          h = ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) |
-            ((d(2) & 0xffL) << 36) | ((d(3) & 0xffL) << 28) |
-            ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
-            ((d(6) & 0xffL) << 4) | ((d(7) & 0xf0L) >>> 4)
+          val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          h = Md5Prefix.prefix(bytes, 0, bytes.length, Bits / 4)
           c.keys(idx) = t; c.vals(idx) = h
         }
         var b = 0
@@ -918,28 +921,12 @@ case class DsirFeatureBuckets(child: Expression, nBuckets: Int)
 }
 
 object DsirFeatureBuckets {
-  private final class Md5State {
-    val md: java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-    val out = new Array[Byte](16)
-  }
-  private val state = ThreadLocal.withInitial(
-    new java.util.function.Supplier[Md5State] {
-      override def get(): Md5State = new Md5State
-    })
-
   /** 28-bit md5 prefix of the feature's UTF-8 bytes mod nBuckets —
     * identical to conv(substring(md5(f), 1, 7), 16, 10) % nBuckets
     * (non-negative, so long % matches). */
-  private def bucket(s: Md5State, bytes: Array[Byte], nBuckets: Int): Long = {
-    val md = s.md
-    md.reset()
-    md.update(bytes)
-    md.digest(s.out, 0, 16)
-    val d = s.out
-    val h = (((d(0) & 0xff) << 20) | ((d(1) & 0xff) << 12) |
-      ((d(2) & 0xff) << 4) | ((d(3) & 0xf0) >>> 4)).toLong
-    h % nBuckets
+  private def bucket(feature: String, nBuckets: Int): Long = {
+    val bytes = feature.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    Md5Prefix.prefix(bytes, 0, bytes.length, 7) % nBuckets
   }
 
   def compute(text: org.apache.spark.unsafe.types.UTF8String,
@@ -947,10 +934,9 @@ object DsirFeatureBuckets {
     val toks = TokenizerUtil.tokens(text)
     val n = toks.length
     val out = new Array[Long](n + math.max(0, n - 1))
-    val s = state.get()
     var i = 0
     while (i < n) {
-      out(i) = bucket(s, toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8), nBuckets)
+      out(i) = bucket(toks(i), nBuckets)
       i += 1
     }
     // bigrams: space-joined adjacent tokens, the WordShingles(2) law
@@ -959,8 +945,7 @@ object DsirFeatureBuckets {
     while (i < n - 1) {
       sb.setLength(0)
       sb.append(toks(i)).append(' ').append(toks(i + 1))
-      out(n + i) = bucket(s,
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8), nBuckets)
+      out(n + i) = bucket(sb.toString, nBuckets)
       i += 1
     }
     ArrayData.toArrayData(out)
@@ -1054,7 +1039,7 @@ object TermAgg {
   * realistic dims) is ~5–50 MB of task payload — routine broadcast size.
   *
   * Semantics are pinned to the relational reference form
-  * (Ivf.cellRanksRelational) bit-for-bit, IvfParitySpec enforces it:
+  * (ParityReferences.cellRanksRelational) bit-for-bit, IvfParitySpec enforces it:
   * same ascending-index dot/norm accumulation as [[CosineSimilarity]]
   * over the common prefix of the two arrays, same `round(_, 6)`
   * (BigDecimal HALF_UP with NaN/Inf passthrough — Spark's Round), same
@@ -1600,7 +1585,8 @@ object NormalizeText {
   * windows only — orders of magnitude smaller than the token stream)
   * and does the coverage expansion + rebuild in-row. The relational
   * form is retained as the parity/oracle reference
-  * (Dedup.substringExciseRelational, Decontaminate.exciseOverlapRelational;
+  * (ParityReferences.substringExciseRelational and
+  * exciseOverlapRelational in the test tree;
   * ExciseParity in CurationOpsSpec pins equality). */
 case class ExciseWindows(left: Expression, right: Expression, n: Int)
   extends BinaryExpression with ExpectsInputTypes {

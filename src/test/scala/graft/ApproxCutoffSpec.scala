@@ -23,26 +23,6 @@ class ApproxCutoffSpec extends AnyFunSuite {
                        b: org.apache.spark.sql.DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
-  test("SeverModeParity: persist severing mode equals the localCheckpoint default") {
-    // r19 (VERDICT r18 #9): the shared-scorer severing has a conf-gated
-    // cluster-safe persist(MEMORY_AND_DISK) fallback; both modes must be
-    // row-identical, and the default must stay localCheckpoint.
-    import spark.implicits._
-    val df = (1L to 100L).map(i => (i, (i * 37 % 100).toDouble)).toDF("id", "s")
-    val dflt = Sampling.topFractionByScore(df, "s", 0.3)
-    assert(spark.conf.getOption("spark.graft.sever.mode").isEmpty,
-      "default severing mode must be unset (localCheckpoint)")
-    spark.conf.set("spark.graft.sever.mode", "persist")
-    try {
-      val persisted = Sampling.topFractionByScore(df, "s", 0.3)
-      assert(sameRows(dflt, persisted),
-        "persist severing mode diverged from the localCheckpoint default")
-    } finally {
-      spark.conf.unset("spark.graft.sever.mode")
-      spark.catalog.clearCache()
-    }
-  }
-
   test("topFractionByScore: approx == exact, including integer n*fraction boundaries") {
     import spark.implicits._
     // n = 100 distinct scores; 0.25 → f·n = 25 EXACTLY (the boundary

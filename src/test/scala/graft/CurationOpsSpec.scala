@@ -240,14 +240,14 @@ class CurationOpsSpec extends AnyFunSuite {
         (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getBoolean(5))).toMap
     val fixture = Tables.documents(spark, "/root/testdata/sf0.001")
     assert(rows(Repetition.ngramRepetition(fixture, "doc_id", "text")) ==
-      rows(Repetition.ngramRepetitionRelational(fixture, "doc_id", "text")))
+      rows(ParityReferences.ngramRepetitionRelational(fixture, "doc_id", "text")))
     val edge = Seq(
       (1L, ""), (2L, "one"), (3L, "two words"), (4L, "a b a b a b a b"),
       (5L, "x y z x y z x y z x y z"), (6L, "  spaced   out\ttokens "),
       (7L, "héllo wörld héllo wörld héllo wörld"))
       .toDF("doc_id", "text")
     val f = rows(Repetition.ngramRepetition(edge, "doc_id", "text"))
-    assert(f == rows(Repetition.ngramRepetitionRelational(edge, "doc_id", "text")))
+    assert(f == rows(ParityReferences.ngramRepetitionRelational(edge, "doc_id", "text")))
     assert(!f(4L)._5, "a fully-repetitive doc must be dropped")
     assert(f(1L) == ((0L, 0.0, 0.0, 0.0, true)))
   }
@@ -1137,13 +1137,13 @@ class CurationOpsSpec extends AnyFunSuite {
           if (r.isNullAt(2)) -1L else r.getLong(2),
           if (r.isNullAt(3)) -1L else r.getLong(3))).toSeq
     val fused = rows(Dedup.substringExcise(docs, "doc_id", "text", n = 8))
-    assert(fused == rows(Dedup.substringExciseRelational(docs, "doc_id", "text", n = 8)))
+    assert(fused == rows(ParityReferences.substringExciseRelational(docs, "doc_id", "text", n = 8)))
     // the null-text row agrees between forms: '' text, null counts
     assert(fused.find(_._1 == 100005L).get == ((100005L, "", -1L, -1L)))
     val bench = docs.filter(col("doc_id") % 97 === 0)
     val train = docs.filter(col("doc_id") % 97 =!= 0)
     assert(rows(Decontaminate.exciseOverlap(train, bench, "doc_id", "text", n = 4)) ==
-      rows(Decontaminate.exciseOverlapRelational(train, bench, "doc_id", "text", n = 4)))
+      rows(ParityReferences.exciseOverlapRelational(train, bench, "doc_id", "text", n = 4)))
   }
 
   test("ExciseWindows: negative start fails loudly, past-end start is a no-op") {

@@ -30,7 +30,7 @@ class DsirModelSpec extends AnyFunSuite {
     // duplicate buckets within a doc count).
     val docs = graft.Tables.documents(spark, sf)
     val fused = graft.ops.Dsir.featureBucketsFused(docs, "doc_id", "text", 4096)
-    val rel = graft.ops.Dsir.featureBucketsRelational(docs, "doc_id", "text", 4096)
+    val rel = ParityReferences.featureBucketsRelational(docs, "doc_id", "text", 4096)
     assert(fused.count() > 0, "parity fixture produced no features")
     assert(sameRows(fused, rel),
       "fused DSIR feature buckets diverge from the relational form")

@@ -24,7 +24,7 @@ class IvfParitySpec extends AnyFunSuite {
     val ranks =
       if (fused) graft.expressions.VectorExpressions.ivfCellRanks(
         v, centroids.map(_._1).toArray, centroids.map(_._2).toArray, nProbe)
-      else Ivf.cellRanksRelational(v, centroids, nProbe)
+      else ParityReferences.cellRanksRelational(v, centroids, nProbe)
     df.select(col("vec_id"), ranks.as("cells"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
   }

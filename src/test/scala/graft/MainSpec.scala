@@ -108,6 +108,20 @@ class MainSpec extends AnyFunSuite {
     assert(inline.trim == "3", inline)
   }
 
+  test("show -s <seed> previews the seed's typed CSV rows") {
+    val dir = writeProject()
+    val sw = new java.io.StringWriter()
+    val code = Main.execute(spark,
+      Main.Args(command = "show", project = dir.toString, select = Seq("payments")),
+      new java.io.PrintWriter(sw, true))
+    assert(code == 0, sw.toString)
+    val lines = sw.toString.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+    assert(lines == Seq("-- seed.shop.payments",
+      "1 | alice | 10 | 2024-01-01",
+      "2 | bob | 3 | 2024-01-02",
+      "3 | alice | 7 | 2024-02-01"), sw.toString)
+  }
+
   test("compile and ls run no Spark job and leave an absent warehouse absent") {
     val example = "examples/tpch_pipeline"
     val dir = graft.queries.OpsQueries.stageProject(example,

@@ -16,7 +16,7 @@ class MinhashParitySpec extends AnyFunSuite {
                            shingleLen: Int, k: Int): Unit = {
     val fused = Dedup.minhashSignatures(df, "doc_id", "text", shingleLen, k)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val rel = Dedup.minhashSignaturesRelational(df, "doc_id", "text", shingleLen, k)
+    val rel = ParityReferences.minhashSignaturesRelational(df, "doc_id", "text", shingleLen, k)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(fused.keySet == rel.keySet)
     fused.foreach { case (id, sig) =>
@@ -49,7 +49,7 @@ class MinhashParitySpec extends AnyFunSuite {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val fused = Dedup.simhashes(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rel = Dedup.simhashesRelational(docs, "doc_id", "text")
+    val rel = ParityReferences.simhashesRelational(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fused == rel)
     assert(fused.values.toSet.size > 1, "signatures must vary")
@@ -68,7 +68,7 @@ class MinhashParitySpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val fused = Dedup.simhashes(edge, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rel = Dedup.simhashesRelational(edge, "doc_id", "text")
+    val rel = ParityReferences.simhashesRelational(edge, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fused == rel, s"fused=$fused rel=$rel")
     assert(fused(2L) == 0L)

@@ -572,12 +572,12 @@ class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // phraseMatch contract) to the retained groupBy reference forms.
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val post = Retrieval.postingIndex(docs, "doc_id", "text")
-    val postRef = Retrieval.postingIndexRelational(docs, "doc_id", "text")
+    val postRef = ParityReferences.postingIndexRelational(docs, "doc_id", "text")
     assert(post.count() > 0, "parity fixture produced no postings")
     assert(post.exceptAll(postRef).isEmpty && postRef.exceptAll(post).isEmpty,
       "zero-shuffle posting build diverges from the groupBy form")
     val pos = Retrieval.positionalIndex(docs, "doc_id", "text")
-    val posRef = Retrieval.positionalIndexRelational(docs, "doc_id", "text")
+    val posRef = ParityReferences.positionalIndexRelational(docs, "doc_id", "text")
     assert(pos.exceptAll(posRef).isEmpty && posRef.exceptAll(pos).isEmpty,
       "zero-shuffle positional build diverges from the groupBy form")
     // the build itself must be aggregation-free (the per-doc fold runs
